@@ -1,3 +1,4 @@
+import math
 import os
 import sys
 
@@ -23,3 +24,35 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+
+
+@pytest.fixture
+def wand_sides(monkeypatch):
+    """``for side in wand_sides(): ...`` runs the loop body once on each
+    side of ``QueryEngine.topk_wand``'s coordinator switch — the class
+    bound patched to ∞ ("coordinator"), then to 0 ("spark") — and
+    checks after each pass that only the named side answered
+    ``topk_wand`` calls in it."""
+    from xml_to_es_spark.operators.query_engine import QueryEngine
+
+    seen = {"coordinator": 0, "spark": 0}
+    coord, kernel = QueryEngine._wand_coordinator, QueryEngine._wand_group_kernel
+
+    def spy(side, real):
+        def call(self, *a, **kw):
+            seen[side] += 1
+            return real(self, *a, **kw)
+        return call
+
+    monkeypatch.setattr(QueryEngine, "_wand_coordinator", spy("coordinator", coord))
+    monkeypatch.setattr(QueryEngine, "_wand_group_kernel", spy("spark", kernel))
+
+    def sides():
+        for side, bound in (("coordinator", math.inf), ("spark", 0)):
+            monkeypatch.setattr(QueryEngine, "_COORDINATOR_MAX_POSTINGS", bound)
+            seen.update(coordinator=0, spark=0)
+            yield side
+            other = "spark" if side == "coordinator" else "coordinator"
+            assert seen[side] > 0 and seen[other] == 0, (side, seen)
+
+    return sides

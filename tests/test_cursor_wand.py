@@ -1,7 +1,8 @@
 """search_after on the block-max WAND path: cursor paging must
 reproduce the full ranking exactly (bit-equal scores — WAND sums are
 pinned), never re-emit a served doc, keep a k-sized heap at any
-depth, and work identically on the single-group and ranged paths."""
+depth, and work identically on the single-group and ranged paths and
+on both sides of the coordinator switch (``wand_sides``)."""
 
 import numpy as np
 import pandas as pd
@@ -31,28 +32,29 @@ def idx(spark, tmp_path_factory):
 
 
 @pytest.mark.parametrize("n_ranges", [None, 3])
-def test_wand_cursor_paging_reproduces_full_ranking(spark, idx, n_ranges):
+def test_wand_cursor_paging_reproduces_full_ranking(spark, idx, n_ranges, wand_sides):
     eng = QueryEngine(spark, idx)
     q = [(1, "alpha beta"), (2, "alpha")]
-    full = eng.topk_wand(q, k=60, n_ranges=n_ranges).toPandas()
-    for qid in (1, 2):
-        f = full[full.query_id == qid].sort_values("rank")
-        got_docs, got_scores, cur = [], [], None
-        for _ in range(30):
-            kw = {"search_after": {qid: cur}} if cur else {}
-            page = (
-                eng.topk_wand([(qid, dict(q)[qid])], k=9, n_ranges=n_ranges, **kw)
-                .toPandas().sort_values("rank")
-            )
-            if page.empty:
-                break
-            assert list(page["rank"]) == list(range(1, len(page) + 1))
-            assert not set(page["doc_id"]) & set(got_docs)  # no re-emission
-            got_docs += list(page["doc_id"])
-            got_scores += list(page["score"])
-            cur = (float(page["score"].iat[-1]), int(page["doc_id"].iat[-1]))
-        assert got_docs == list(f["doc_id"])
-        assert got_scores == list(f["score"])  # bit-equal across pages
+    for _side in wand_sides():
+        full = eng.topk_wand(q, k=60, n_ranges=n_ranges).toPandas()
+        for qid in (1, 2):
+            f = full[full.query_id == qid].sort_values("rank")
+            got_docs, got_scores, cur = [], [], None
+            for _ in range(30):
+                kw = {"search_after": {qid: cur}} if cur else {}
+                page = (
+                    eng.topk_wand([(qid, dict(q)[qid])], k=9, n_ranges=n_ranges, **kw)
+                    .toPandas().sort_values("rank")
+                )
+                if page.empty:
+                    break
+                assert list(page["rank"]) == list(range(1, len(page) + 1))
+                assert not set(page["doc_id"]) & set(got_docs)  # no re-emission
+                got_docs += list(page["doc_id"])
+                got_scores += list(page["score"])
+                cur = (float(page["score"].iat[-1]), int(page["doc_id"].iat[-1]))
+            assert got_docs == list(f["doc_id"])
+            assert got_scores == list(f["score"])  # bit-equal across pages
 
 
 def test_wand_kernel_after_param():

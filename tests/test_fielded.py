@@ -65,10 +65,11 @@ def test_title_only_hit_ranks_per_field(spark, fielded):
     assert list(title[title.query_id == 1]["doc_id"]) == [7]
 
 
-def test_per_field_scores_bit_equal_to_dataframe_twin(spark, fielded):
+def test_per_field_scores_bit_equal_to_dataframe_twin(spark, fielded, wand_sides):
     """Each field scores with ITS OWN df/avgdl/dl — bit-equal to the
-    pure-DataFrame BM25 run over that column alone, on both the
-    pinned-sum and distributed-WAND codec paths."""
+    pure-DataFrame BM25 run over that column alone, on the pinned-sum
+    codec path and on both sides of the WAND path (coordinator and
+    distributed Spark)."""
     root, pdf, idx = fielded
     docs = spark.createDataFrame(pdf)
     eng = QueryEngine(spark, idx)
@@ -80,10 +81,10 @@ def test_per_field_scores_bit_equal_to_dataframe_twin(spark, fielded):
             )
             .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
         )
-        for got in (
-            eng.topk(QS, k=5, field=fld),
-            eng.topk_wand(QS, k=5, field=fld, n_ranges=2),
-        ):
+        got_all = [eng.topk(QS, k=5, field=fld)]
+        for _side in wand_sides():
+            got_all.append(eng.topk_wand(QS, k=5, field=fld, n_ranges=2))
+        for got in got_all:
             g = got.toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
             assert list(g.doc_id) == list(want.doc_id)
             assert list(g.score) == [float(s) for s in want.score]  # bit-equal
@@ -124,7 +125,9 @@ def test_fielded_phrase_and_field_validation(spark, fielded):
         bad.validate_mapping(idx)
 
 
-def test_fielded_upsert_inherits_mapping_and_matches_rebuild(spark, fielded_mut):
+def test_fielded_upsert_inherits_mapping_and_matches_rebuild(
+    spark, fielded_mut, wand_sides
+):
     """An upsert from a DEFAULT-config builder must inherit the fielded
     + positional mapping (ES: a PUT cannot change the mapping), detect
     title-only changes, and stay bit-equal to a fresh rebuild."""
@@ -151,16 +154,17 @@ def test_fielded_upsert_inherits_mapping_and_matches_rebuild(spark, fielded_mut)
     IndexBuilder(spark, CFG).build(spark.createDataFrame(v2), rebuild)
     engr = QueryEngine(spark, rebuild)
     for fld in ("text", "title"):
-        a = (
-            eng2.topk_wand(QS, k=10, field=fld, n_ranges=2)
-            .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
-        )
         b = (
             engr.topk(QS, k=10, field=fld)
             .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
         )
-        assert list(a.doc_id) == list(b.doc_id)
-        assert list(a.score) == list(b.score)
+        for _side in wand_sides():
+            a = (
+                eng2.topk_wand(QS, k=10, field=fld, n_ranges=2)
+                .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
+            )
+            assert list(a.doc_id) == list(b.doc_id)
+            assert list(a.score) == list(b.score)
 
     # a TITLE-only re-crawl is a change (md5 spans all indexed fields)
     res2 = IndexBuilder(spark).upsert(
@@ -195,7 +199,7 @@ def test_fielded_compact_keeps_fields_and_positions(spark, fielded_mut):
     ) == [3]
 
 
-def test_pagination_pages_are_slices_of_full_ranking(spark, tmp_path):
+def test_pagination_pages_are_slices_of_full_ranking(spark, tmp_path, wand_sides):
     cfg = IndexConfig(n_groups=2, block_size=32)
     pdf = pd.DataFrame(
         {"doc_id": range(40), "text": [f"alpha w{i} beta" for i in range(40)]}
@@ -204,24 +208,25 @@ def test_pagination_pages_are_slices_of_full_ranking(spark, tmp_path):
     IndexBuilder(spark, cfg).build(spark.createDataFrame(pdf), idx)
     eng = QueryEngine(spark, idx)
     q = [(1, "alpha"), (2, "beta")]
-    full = eng.topk_wand(q, k=20, n_ranges=2).toPandas().sort_values(
-        ["query_id", "rank"]
-    )
-    for path in ("topk", "wand", "dist"):
-        if path == "topk":
-            page2 = eng.topk(q, k=10, from_=10).toPandas()
-        elif path == "wand":
-            page2 = eng.topk_wand(q, k=10, n_ranges=2, from_=10).toPandas()
-        else:
-            page2 = eng.topk_distributed(q, k=10, from_=10).toPandas()
-        page2 = page2.sort_values(["query_id", "rank"])
-        for qid in (1, 2):
-            f = full[full.query_id == qid]
-            p = page2[page2.query_id == qid]
-            assert list(p["rank"]) == list(range(11, 11 + len(p)))
-            assert list(p["doc_id"]) == list(f["doc_id"])[10:10 + len(p)]
-            if path != "dist":
-                assert list(p["score"]) == list(f["score"])[10:10 + len(p)]
+    for _side in wand_sides():
+        full = eng.topk_wand(q, k=20, n_ranges=2).toPandas().sort_values(
+            ["query_id", "rank"]
+        )
+        for path in ("topk", "wand", "dist"):
+            if path == "topk":
+                page2 = eng.topk(q, k=10, from_=10).toPandas()
+            elif path == "wand":
+                page2 = eng.topk_wand(q, k=10, n_ranges=2, from_=10).toPandas()
+            else:
+                page2 = eng.topk_distributed(q, k=10, from_=10).toPandas()
+            page2 = page2.sort_values(["query_id", "rank"])
+            for qid in (1, 2):
+                f = full[full.query_id == qid]
+                p = page2[page2.query_id == qid]
+                assert list(p["rank"]) == list(range(11, 11 + len(p)))
+                assert list(p["doc_id"]) == list(f["doc_id"])[10:10 + len(p)]
+                if path != "dist":
+                    assert list(p["score"]) == list(f["score"])[10:10 + len(p)]
 
     # search_after cursor: strictly-after hits, in order, no overlap
     first = eng.topk_distributed(q, k=10).toPandas()

@@ -137,27 +137,31 @@ def test_wand_rank_identity(spark, corpus, index_dir):
             )
 
 
-def test_wand_distributed_rank_identity_and_multitask(spark, corpus, index_dir):
+def test_wand_distributed_rank_identity_and_multitask(
+    spark, corpus, index_dir, wand_sides
+):
     """The scale WAND path: per-(query, doc-range) local top-k merged
-    globally must stay rank- AND score-identical to pyref, and a
-    single query must actually be scored by >1 range task on the
-    salted corpus."""
+    globally must stay rank- AND score-identical to pyref (on both
+    sides of the coordinator switch; ``n_ranges`` moves only the Spark
+    side), and a single query must actually be scored by >1 range task
+    on the salted corpus."""
     _, texts = corpus
     ref = PyRefIndex(texts)
     queries = fixtures.generate_queries()
     qlist = list(zip(queries["query_id"], queries["query_text"]))
     eng = QueryEngine(spark, index_dir)
-    got = eng.topk_wand(qlist, k=10, n_ranges=4).toPandas()
-    for qid, qtext in qlist:
-        expect = ref.topk(qtext, k=10)
-        g = got[got.query_id == qid].sort_values("rank")
-        assert list(g["doc_id"]) == [d for d, _ in expect], f"q{qid}: {qtext}"
-        if expect:
-            np.testing.assert_allclose(
-                g["score"].to_numpy(),
-                np.array([s for _, s in expect]),
-                rtol=0, atol=1e-9,
-            )
+    for side in wand_sides():
+        got = eng.topk_wand(qlist, k=10, n_ranges=4).toPandas()
+        for qid, qtext in qlist:
+            expect = ref.topk(qtext, k=10)
+            g = got[got.query_id == qid].sort_values("rank")
+            assert list(g["doc_id"]) == [d for d, _ in expect], f"{side} q{qid}"
+            if expect:
+                np.testing.assert_allclose(
+                    g["score"].to_numpy(),
+                    np.array([s for _, s in expect]),
+                    rtol=0, atol=1e-9,
+                )
     # >1 range group evaluates the hot single-term query (query 1 is
     # the hottest head term → present in every doc_id range)
     matched = eng._matched_segments(qlist[:1])

@@ -83,6 +83,38 @@ def test_segment_rejects_unsorted():
         )
 
 
+def test_segment_rejects_zero_tf():
+    """A posting with tf=0 has no occurrence: a trailing one used to
+    index past the position stream on encode, so it is rejected up
+    front, with or without positions."""
+    docs = np.array([1, 4, 9], dtype=np.int64)
+    dls = np.array([10, 10, 10], dtype=np.int64)
+    tfs = np.array([2, 1, 0], dtype=np.int64)
+    with pytest.raises(ValueError, match="tfs must be >= 1"):
+        encode_segment(docs, tfs, dls)
+    with pytest.raises(ValueError, match="tfs must be >= 1"):
+        encode_segment(
+            docs, tfs, dls,
+            positions=[np.array([0, 3]), np.array([5]), np.array([], np.int64)],
+        )
+
+
+def test_decode_positions_rejects_zero_tf():
+    from xml_to_es_spark.operators.postings import decode_positions
+
+    with pytest.raises(ValueError, match="tfs must be >= 1"):
+        decode_positions(b"", np.array([0, 0], dtype=np.int64))
+    seg = encode_segment(
+        np.array([1, 4], dtype=np.int64), np.array([1, 2], dtype=np.int64),
+        np.array([10, 10], dtype=np.int64),
+        positions=[np.array([2]), np.array([0, 7])],
+    )
+    with pytest.raises(ValueError, match="tfs must be >= 1"):
+        decode_positions(seg["pos_bin"], np.array([1, 0, 2], dtype=np.int64))
+    back = decode_positions(seg["pos_bin"], np.array([1, 2], dtype=np.int64))
+    assert [list(p) for p in back] == [[2], [0, 7]]
+
+
 def test_block_upper_bounds_dominate_true_scores():
     rng = np.random.RandomState(11)
     doc_ids = np.cumsum(rng.randint(1, 9, size=400)).astype(np.int64)

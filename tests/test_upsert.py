@@ -43,12 +43,18 @@ def _mutate(pdf, changes: dict, new: dict):
     return out
 
 
-def _rankings(spark, idx, k=10):
+# topk_wand rankings, single-group and ranged, on each side of its
+# coordinator switch (the ``wand_sides`` fixture)
+WAND_KEYS = [f"{w}@{s}" for w in ("wand", "wand_r") for s in ("coordinator", "spark")]
+
+
+def _rankings(spark, idx, wand_sides, k=10):
     eng = QueryEngine(spark, idx)
     out = {}
     out["topk"] = eng.topk(QUERIES, k=k).toPandas()
-    out["wand"] = eng.topk_wand(QUERIES, k=k).toPandas()
-    out["wand_r"] = eng.topk_wand(QUERIES, k=k, n_ranges=3).toPandas()
+    for side in wand_sides():
+        out[f"wand@{side}"] = eng.topk_wand(QUERIES, k=k).toPandas()
+        out[f"wand_r@{side}"] = eng.topk_wand(QUERIES, k=k, n_ranges=3).toPandas()
     out["dist"] = eng.topk_distributed(QUERIES, k=k).toPandas()
     return eng, out
 
@@ -81,7 +87,7 @@ def test_upsert_noop_on_unchanged(spark, built):
     assert len(index_dirs(idx)) == 1
 
 
-def test_upsert_matches_full_rebuild(spark, built):
+def test_upsert_matches_full_rebuild(spark, built, wand_sides):
     root, v1, idx = built
     # v2: doc 5 re-crawled with new text (omega enters, alpha leaves),
     # doc 7 re-crawled unchanged, doc 200 brand new
@@ -98,14 +104,14 @@ def test_upsert_matches_full_rebuild(spark, built):
 
     rebuild = str(root / "rebuild_v2")
     IndexBuilder(spark, CFG).build(spark.createDataFrame(v2), rebuild)
-    eng_m, merged = _rankings(spark, idx)
-    eng_r, fresh = _rankings(spark, rebuild)
+    eng_m, merged = _rankings(spark, idx, wand_sides)
+    eng_r, fresh = _rankings(spark, rebuild, wand_sides)
     # corpus-wide stats are exact, not per-delta
     assert eng_m.n_docs == eng_r.n_docs == 121
     assert eng_m.avgdl == eng_r.avgdl
     _assert_same(merged["topk"], fresh["topk"])
-    _assert_same(merged["wand"], fresh["topk"])
-    _assert_same(merged["wand_r"], fresh["topk"])
+    for key in WAND_KEYS:
+        _assert_same(merged[key], fresh["topk"])
     _assert_same(merged["dist"], fresh["dist"], exact_scores=False)
     # the old version of doc 5 must be invisible: "alpha" hits exclude
     # nothing ranked from its dead posting
@@ -113,7 +119,7 @@ def test_upsert_matches_full_rebuild(spark, built):
     assert set(got5["doc_id"]) == {5, 200}
 
 
-def test_second_upsert_supersedes_first(spark, built):
+def test_second_upsert_supersedes_first(spark, built, wand_sides):
     root, v1, idx = built
     # doc 5 updated AGAIN: v3 kills the delta=1 version too
     v3_doc5 = "totally different delta two text"
@@ -130,11 +136,11 @@ def test_second_upsert_supersedes_first(spark, built):
     )
     rebuild = str(root / "rebuild_v3")
     IndexBuilder(spark, CFG).build(spark.createDataFrame(v3), rebuild)
-    _, merged = _rankings(spark, idx)
-    _, fresh = _rankings(spark, rebuild)
+    _, merged = _rankings(spark, idx, wand_sides)
+    _, fresh = _rankings(spark, rebuild, wand_sides)
     _assert_same(merged["topk"], fresh["topk"])
-    _assert_same(merged["wand"], fresh["topk"])
-    _assert_same(merged["wand_r"], fresh["topk"])
+    for key in WAND_KEYS:
+        _assert_same(merged[key], fresh["topk"])
     # omega now matches only doc 200 (doc 5's omega text was replaced)
     got = merged["topk"][(merged["topk"].query_id == 3)]
     assert set(got["doc_id"]) == {200}
@@ -192,7 +198,7 @@ def test_search_fetch_store_source_live_versions(spark, tmp_path):
     assert [(r["doc_id"], r["text"]) for r in got3] == [(3, "omega replacement body")]
 
 
-def test_many_sequential_upserts_match_rebuild(spark, tmp_path):
+def test_many_sequential_upserts_match_rebuild(spark, tmp_path, wand_sides):
     """LSM stress: 4 sequential upserts (updates + inserts, including
     re-updates of the same doc) must still rank bit-equal to a fresh
     rebuild of the final corpus, with one tombstone ord per update."""
@@ -225,14 +231,17 @@ def test_many_sequential_upserts_match_rebuild(spark, tmp_path):
     qs = [(1, "alpha"), (2, "omega"), (3, "gamma fifty"), (4, "epsilon")]
     eng_m = QueryEngine(spark, idx)
     eng_r = QueryEngine(spark, rebuild)
-    a = eng_m.topk_wand(qs, k=10, n_ranges=2).toPandas()
     b = eng_r.topk(qs, k=10).toPandas()
-    _assert_same(a, b)
-    got3 = a[a.query_id == 2]
-    assert set(got3["doc_id"]) == {3}  # only the third rewrite is live
+    for _side in wand_sides():
+        a = eng_m.topk_wand(qs, k=10, n_ranges=2).toPandas()
+        _assert_same(a, b)
+        got3 = a[a.query_id == 2]
+        assert set(got3["doc_id"]) == {3}  # only the third rewrite is live
 
 
-def test_upsert_crash_before_commit_invisible_then_replayable(spark, tmp_path):
+def test_upsert_crash_before_commit_invisible_then_replayable(
+    spark, tmp_path, wand_sides
+):
     """Atomicity: a crash between the delta build and the commit
     marker leaves the index readable in its EXACT pre-upsert state
     (tombstones for the uncommitted ord are ignored, the partial delta
@@ -277,12 +286,13 @@ def test_upsert_crash_before_commit_invisible_then_replayable(spark, tmp_path):
     v2 = _mutate(v1, {3: "omega rewritten three"}, {100: "omega new hundred"})
     rebuild = str(tmp_path / "atomic_rebuild")
     IndexBuilder(spark, CFG).build(spark.createDataFrame(v2), rebuild)
-    got = QueryEngine(spark, idx).topk_wand(QUERIES, k=10, n_ranges=2).toPandas()
     want = QueryEngine(spark, rebuild).topk(QUERIES, k=10).toPandas()
-    _assert_same(got, want)
+    for _side in wand_sides():
+        got = QueryEngine(spark, idx).topk_wand(QUERIES, k=10, n_ranges=2).toPandas()
+        _assert_same(got, want)
 
 
-def test_compact_collapses_to_single_dir(spark, built):
+def test_compact_collapses_to_single_dir(spark, built, wand_sides):
     """LSM compaction (runs after the two upserts above): base + 2
     deltas + tombstones → one fresh dir, rankings bit-equal to the
     v3 full rebuild, no text input needed."""
@@ -292,13 +302,13 @@ def test_compact_collapses_to_single_dir(spark, built):
     assert res["dirs_merged"] == 3 and res["tombstones_dropped"] == 1
     assert len(index_dirs(compacted)) == 1
     assert load_kills(spark, compacted) == {}
-    eng_c, cranks = _rankings(spark, compacted)
+    eng_c, cranks = _rankings(spark, compacted, wand_sides)
     rebuild = str(root / "rebuild_v3")  # built by the previous test
-    eng_r, fresh = _rankings(spark, rebuild)
+    eng_r, fresh = _rankings(spark, rebuild, wand_sides)
     assert eng_c.n_docs == eng_r.n_docs and eng_c.avgdl == eng_r.avgdl
     _assert_same(cranks["topk"], fresh["topk"])
-    _assert_same(cranks["wand"], fresh["topk"])
-    _assert_same(cranks["wand_r"], fresh["topk"])
+    for key in WAND_KEYS:
+        _assert_same(cranks[key], fresh["topk"])
     # compacted index is still upsert-able (normal docs table layout)
     r2 = IndexBuilder(spark, CFG).upsert(
         spark.createDataFrame(pd.DataFrame({"doc_id": [300], "text": ["epsilon zeta"]})),

@@ -8,6 +8,7 @@ from xml_to_es_spark.config import BM25Config
 from xml_to_es_spark.operators.postings import encode_segment
 from xml_to_es_spark.operators.wand import wand_topk
 from xml_to_es_spark.pyref import idf as ref_idf
+from xml_to_es_spark.pyref import saturation
 
 
 def _make_corpus(rng, n_docs=600, n_terms=12, block_size=32, salted=False):
@@ -37,16 +38,15 @@ def _make_corpus(rng, n_docs=600, n_terms=12, block_size=32, salted=False):
             seg["salt"] = 0
             segs.append(seg)
         entries.append({"term": term, "idf": w, "segments": segs})
-    # brute force, term-major lexicographic order (terms already sorted)
+    # brute force, term-major lexicographic order (terms already sorted),
+    # each contribution idf * saturation exactly as pyref evaluates it
     for e in entries:
         w = e["idf"]
         for seg in e["segments"]:
             from xml_to_es_spark.operators.postings import decode_segment
 
             d, tf, dl = decode_segment(seg)
-            contrib = w * tf * (cfg.k1 + 1) / (
-                tf + cfg.k1 * (1 - cfg.b + cfg.b * dl / avgdl)
-            )
+            contrib = w * saturation(tf, dl, avgdl, cfg)
             for doc, c in zip(d, contrib):
                 truth[int(doc)] = truth.get(int(doc), 0.0) + float(c)
     return entries, truth, avgdl
@@ -68,9 +68,7 @@ def test_wand_matches_bruteforce(seed, salted):
 
                 for seg in e["segments"]:
                     d, tf, dl = decode_segment(seg)
-                    contrib = w * tf * (cfg.k1 + 1) / (
-                        tf + cfg.k1 * (1 - cfg.b + cfg.b * dl / avgdl)
-                    )
+                    contrib = w * saturation(tf, dl, avgdl, cfg)
                     for doc, c in zip(d, contrib):
                         t2[int(doc)] = t2.get(int(doc), 0.0) + float(c)
             expect = sorted(t2.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
@@ -97,9 +95,7 @@ def test_wand_range_partition_merges_to_global(seed):
     for e in sorted(q, key=lambda e: e["term"]):
         for seg in e["segments"]:
             d, tf, dl = decode_segment(seg)
-            contrib = e["idf"] * tf * (cfg.k1 + 1) / (
-                tf + cfg.k1 * (1 - cfg.b + cfg.b * dl / avgdl)
-            )
+            contrib = e["idf"] * saturation(tf, dl, avgdl, cfg)
             for doc, c in zip(d, contrib):
                 t2[int(doc)] = t2.get(int(doc), 0.0) + float(c)
     expect = sorted(t2.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
@@ -142,9 +138,7 @@ def test_wand_property_ranges_and_tombstones(seed, k, n_dead, n_ranges):
     for e in sorted(q, key=lambda e: e["term"]):
         for seg in e["segments"]:
             d, tf, dl = decode_segment(seg)
-            contrib = e["idf"] * tf * (cfg.k1 + 1) / (
-                tf + cfg.k1 * (1 - cfg.b + cfg.b * dl / avgdl)
-            )
+            contrib = e["idf"] * saturation(tf, dl, avgdl, cfg)
             for doc, c in zip(d, contrib):
                 if dead is None or doc not in set(dead.tolist()):
                     truth[int(doc)] = truth.get(int(doc), 0.0) + float(c)

@@ -102,6 +102,8 @@ def encode_segment(
         raise ValueError("empty posting segment")
     if n > 1 and not (np.diff(doc_ids) > 0).all():
         raise ValueError("doc_ids must be strictly ascending within a segment")
+    if (tfs < 1).any():
+        raise ValueError("tfs must be >= 1 (a posting records an occurrence)")
     deltas = np.empty(n, dtype=np.uint64)
     deltas[0] = np.uint64(doc_ids[0])
     if n > 1:
@@ -199,6 +201,8 @@ def decode_positions(pos_bin: bytes, tfs: np.ndarray) -> list[np.ndarray]:
     tfs = np.asarray(tfs, dtype=np.int64)
     if tfs.size == 0:
         return []
+    if (tfs < 1).any():
+        raise ValueError("tfs must be >= 1 (a posting records an occurrence)")
     total = int(tfs.sum())
     deltas = varbyte_decode(pos_bin, total).astype(np.int64)
     cum = np.cumsum(deltas)
@@ -222,4 +226,4 @@ def block_score_upper_bounds(
     the block)."""
     tf = np.asarray(block_max_tf, dtype=np.float64)
     dl = np.asarray(block_min_dl, dtype=np.float64)
-    return idf * tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
+    return idf * (tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl)))

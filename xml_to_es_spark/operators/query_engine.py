@@ -26,14 +26,18 @@ Physical query plan (scale-first):
      identical to pyref, so scores are bit-equal); the distributed
      path is partial-agg sum + TakeOrderedAndProject with a final
      deterministic re-sum of the top candidates.
+  8. block-max WAND batches under a posting-volume bound on a local
+     index skip the Spark job: the driver reads the pruned segments
+     with pyarrow and runs the same kernel (``_wand_coordinator``).
 
 Tie-break doc_id ASC everywhere (mandatory for rank-identity).
 """
 
 from __future__ import annotations
 
+import logging
 import math
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -48,6 +52,15 @@ from xml_to_es_spark.pyref import tokenize
 
 CONTRIB_SCHEMA = "query_id long, term string, doc_id long, contrib double"
 TOPK_SCHEMA = "query_id long, rank int, doc_id long, score double"
+
+logger = logging.getLogger(__name__)
+
+# the postings columns one WAND cursor segment reads
+_SEG_COLS = (
+    "salt", "n_docs", "block_last_doc", "block_max_tf", "block_min_dl",
+    "block_doc_off", "block_tf_off", "block_dl_off",
+    "docs_bin", "tfs_bin", "dls_bin",
+)
 
 
 def _sql_str(s: str) -> str:
@@ -82,6 +95,64 @@ def _dead_mask(doc_ids: np.ndarray, dead: np.ndarray | None) -> np.ndarray | Non
     return dead[pos] == doc_ids
 
 
+def _local_dir(path: str) -> str | None:
+    """The local filesystem path of an index dir, or None when it
+    lives behind a non-local filesystem scheme."""
+    d = path[len("file:"):] if path.startswith("file:") else path
+    return None if "://" in d else d
+
+
+def _wand_group_hits(
+    rows: Iterable[dict],
+    k: int,
+    k1: float,
+    b: float,
+    avgdl: float,
+    block_size: int,
+    dead: np.ndarray | None = None,
+    after: tuple[float, int] | None = None,
+    doc_lo: int | None = None,
+    doc_hi: int | None = None,
+) -> list[tuple[int, float]]:
+    """The WAND kernel body shared by the Spark and coordinator paths:
+    one (query, dir[, range]) group's matched segment rows (each with
+    term, idf, avgdl and the :data:`_SEG_COLS` columns) → its local
+    block-max WAND top-k [(doc_id, score)]."""
+    from xml_to_es_spark.operators.wand import wand_topk
+
+    entries: dict[str, dict] = {}
+    for r in rows:
+        e = entries.setdefault(
+            r["term"],
+            {
+                "term": r["term"],
+                "idf": float(r["idf"]),
+                "avgdl": float(r["avgdl"]),
+                "segments": [],
+            },
+        )
+        e["segments"].append({c: r[c] for c in _SEG_COLS})
+    return wand_topk(
+        list(entries.values()), k, k1, b, avgdl, block_size,
+        doc_lo=doc_lo, doc_hi=doc_hi, dead=dead, after=after,
+    )
+
+
+def _merge_pages(
+    byq: dict[int, list[tuple[float, int]]], k_local: int, from_: int
+) -> list[tuple[int, int, int, float]]:
+    """Global (query_id, rank, doc_id, score) rows from per-query
+    partial top-k lists of (score, doc_id): ranks from_+1 .. k_local
+    by (score desc, doc_id asc). Scores pass through untouched."""
+    rows = []
+    for qid in sorted(byq):
+        lst = sorted(byq[qid], key=lambda sd: (-sd[0], sd[1]))
+        for rank in range(from_ + 1, min(k_local, len(lst)) + 1):
+            s, d = lst[rank - 1]
+            rows.append((qid, rank, d, s))
+    return rows
+
+
 def _score_segments(k1: float, b: float, dead_by_ord=None):
     """mapInPandas kernel: postings segments × matched query terms →
     per-(query, doc) BM25 contributions. Fully numpy inside the Arrow
@@ -113,9 +184,9 @@ def _score_segments(k1: float, b: float, dead_by_ord=None):
                             continue
                 w = float(pdf["idf"].iat[i])
                 avgdl = float(pdf["avgdl"].iat[i])
-                contrib = w * tfs * (k1 + 1.0) / (
+                contrib = w * (tfs * (k1 + 1.0) / (
                     tfs + k1 * (1.0 - b + b * dls / avgdl)
-                )
+                ))
                 out_q.append(np.full(n, pdf["query_id"].iat[i], dtype=np.int64))
                 out_t.append(np.full(n, pdf["term"].iat[i], dtype=object))
                 out_d.append(doc_ids)
@@ -506,6 +577,11 @@ class QueryEngine:
         # dataset handle per dir
         self._dict_local_ok: bool | None = None
         self._dict_ds: dict[int, object] = {}
+        # coordinator WAND path (see :meth:`_wand_coordinator`): one
+        # pyarrow postings dataset handle per dir; a failed local read
+        # routes this engine's later batches straight to Spark
+        self._post_ds: dict[int, object] = {}
+        self._post_local_ok = True
 
     def _parquet(self, path: str) -> DataFrame:
         df = self._scan_cache.get(path)
@@ -582,8 +658,8 @@ class QueryEngine:
             total = 0
             ok = True
             for _o, p in self.dirs:
-                d = p[len("file:"):] if p.startswith("file:") else p
-                if "://" in d:
+                d = _local_dir(p)
+                if d is None:
                     ok = False
                     break
                 for root, _dirs, files in _os.walk(f"{d}/terms"):
@@ -600,11 +676,11 @@ class QueryEngine:
 
             rows: list[tuple] = []
             for o, p in self.dirs:
-                d = p[len("file:"):] if p.startswith("file:") else p
                 dset = self._dict_ds.get(o)
                 if dset is None:
                     dset = self._dict_ds[o] = pads.dataset(
-                        f"{d}/terms", format="parquet", partitioning="hive"
+                        f"{_local_dir(p)}/terms", format="parquet",
+                        partitioning="hive",
                     )
                 t = dset.to_table(
                     columns=["term", "df", "group"],
@@ -619,6 +695,10 @@ class QueryEngine:
                 ]
             return rows
         except Exception:
+            logger.debug(
+                "local terms-dictionary read failed; the distributed "
+                "scan serves this engine from now on", exc_info=True,
+            )
             self._dict_local_ok = False
             return None
 
@@ -806,15 +886,43 @@ class QueryEngine:
         k-sized at any depth, and block-max pruning still applies —
         deep cursor pages are never slower than page one (unlike
         ``from_``, which ranks from_+k rows). Ranks restart at 1 per
-        page."""
-        matched = self._matched_segments(
+        page.
+
+        Where it runs: a batch whose matched posting volume (Σ live df
+        over its (query, term) pairs) is at most
+        :data:`_COORDINATOR_MAX_POSTINGS` on an all-local index is
+        answered on the driver (:meth:`_wand_coordinator`) with no
+        Spark job; ``n_ranges`` applies only on the Spark side, which
+        serves everything else. Both sides return identical rows."""
+        qt = self._query_terms(
             queries, fuzziness, field, fields,
             prefix_expansions=prefix_expansions,
             field_boosts=field_boosts,
         )
-        if matched is None:
+        if qt is None:
             return local_rows_df(self.spark, [], schema=TOPK_SCHEMA)
+        meta, present = qt
         k_local = from_ + k  # pagination: page p needs the top from_+k
+        volume = sum(meta[t]["df"] for _q, t, _i, _a in present)
+        local = self._post_local_ok and all(
+            _local_dir(p) is not None for _o, p in self.dirs
+        )
+        if local and volume <= self._COORDINATOR_MAX_POSTINGS:
+            segs = self._segments_local(meta)
+            if segs is not None:
+                logger.debug(
+                    "topk_wand: %d queries, %d postings on the coordinator",
+                    len(queries), volume,
+                )
+                rows = self._wand_coordinator(
+                    segs, present, k_local, from_, search_after
+                )
+                return local_rows_df(self.spark, rows, schema=TOPK_SCHEMA)
+        logger.debug(
+            "topk_wand: %d queries, %d postings on Spark (local=%s)",
+            len(queries), volume, local,
+        )
+        matched = self._attach_query_terms(self._pruned_postings(meta), present)
         if (n_ranges and n_ranges > 1) or len(self.dirs) > 1:
             # per-(query, dir, range) local top-k, global merge: a
             # doc's live contributions all sit in ONE (dir, range)
@@ -853,43 +961,14 @@ class QueryEngine:
         dead_by_ord = self._dead_by_ord
 
         def run(pdf: pd.DataFrame) -> pd.DataFrame:
-            from xml_to_es_spark.operators.wand import wand_topk
-
-            entries: dict[str, dict] = {}
-            for r in pdf.itertuples(index=False):
-                e = entries.setdefault(
-                    r.term,
-                    {
-                        "term": r.term,
-                        "idf": float(r.idf),
-                        "avgdl": float(r.avgdl),
-                        "segments": [],
-                    },
-                )
-                e["segments"].append(
-                    {
-                        "salt": int(r.salt),
-                        "n_docs": int(r.n_docs),
-                        "block_last_doc": list(r.block_last_doc),
-                        "block_max_tf": list(r.block_max_tf),
-                        "block_min_dl": list(r.block_min_dl),
-                        "block_doc_off": list(r.block_doc_off),
-                        "block_tf_off": list(r.block_tf_off),
-                        "block_dl_off": list(r.block_dl_off),
-                        "docs_bin": r.docs_bin,
-                        "tfs_bin": r.tfs_bin,
-                        "dls_bin": r.dls_bin,
-                    }
-                )
-            bs = int(pdf["bsz"].iat[0])
-            dead = dead_by_ord.get(int(pdf["ord"].iat[0]))
-            lo = int(pdf["range_lo"].iat[0]) if ranged else None
-            hi = int(pdf["range_hi"].iat[0]) if ranged else None
             qid = int(pdf["query_id"].iat[0])
-            hits = wand_topk(
-                list(entries.values()), k, k1, b, avgdl, bs,
-                doc_lo=lo, doc_hi=hi, dead=dead,
+            hits = _wand_group_hits(
+                pdf.to_dict("records"), k, k1, b, avgdl,
+                int(pdf["bsz"].iat[0]),
+                dead=dead_by_ord.get(int(pdf["ord"].iat[0])),
                 after=None if after is None else after.get(qid),
+                doc_lo=int(pdf["range_lo"].iat[0]) if ranged else None,
+                doc_hi=int(pdf["range_hi"].iat[0]) if ranged else None,
             )
             out = {
                 "query_id": np.full(len(hits), qid, dtype=np.int64),
@@ -904,6 +983,91 @@ class QueryEngine:
             return pd.DataFrame(out)
 
         return run
+
+    # the coordinator bound: a topk_wand batch matching at most this
+    # many postings (Σ live df over its (query, term) pairs) on an
+    # all-local index runs on the driver — pyarrow-read segments, the
+    # same WAND kernel, no Spark job; above it the Spark path runs
+    # unchanged. Timed with tools/coordinator_crossover.py (table in
+    # CHANGES.md; local[2] without n_ranges, local[4] with n_ranges=4):
+    # the Spark side won at no measured size, up to the largest batch
+    # timed (5.2M postings), so this is NOT a measured crossover but a
+    # cap on the work and memory one request may put on the driver,
+    # set at the top of the measured range. Where the crossover lies
+    # is unverified above 5.2M postings, for other n_ranges and at
+    # other core counts.
+    _COORDINATOR_MAX_POSTINGS = 5_000_000
+
+    def _segments_local(self, meta: dict[str, dict]) -> dict | None:
+        """ord → pyarrow table of that dir's segments of the query
+        terms, read on the driver (group-partition and term filter,
+        one cached dataset per dir). A failed read returns None, is
+        logged at DEBUG, and sends this engine's later batches straight
+        to the Spark path."""
+        import pyarrow as pa
+        import pyarrow.dataset as pads
+
+        out = {}
+        try:
+            for o, p in self.dirs:
+                terms_here = sorted(t for t, m in meta.items() if o in m["groups"])
+                if not terms_here:
+                    continue
+                dset = self._post_ds.get(o)
+                if dset is None:
+                    dset = self._post_ds[o] = pads.dataset(
+                        f"{_local_dir(p)}/postings", format="parquet",
+                        partitioning="hive",
+                    )
+                groups = sorted({meta[t]["groups"][o] for t in terms_here})
+                out[o] = dset.to_table(
+                    columns=["term", *_SEG_COLS],
+                    filter=pads.field("group").isin(groups)
+                    & pads.field("term").isin(terms_here),
+                )
+        except (OSError, pa.ArrowException):
+            logger.debug(
+                "topk_wand: local postings read failed; Spark serves "
+                "this engine from now on", exc_info=True,
+            )
+            self._post_local_ok = False
+            return None
+        return out
+
+    def _wand_coordinator(
+        self,
+        segs_by_ord: dict,
+        present: list[tuple],
+        k_local: int,
+        from_: int,
+        after: dict[int, tuple[float, int]] | None,
+    ) -> list[tuple[int, int, int, float]]:
+        """The driver-side twin of the Spark WAND path over the
+        segments :meth:`_segments_local` read: one WAND per
+        (query, dir) with that dir's tombstones, and the per-dir pages
+        merged like :meth:`_merge_partials_local`. Same kernel, same
+        inputs, so rows and scores are identical to the Spark side."""
+        k1, b = self.cfg.k1, self.cfg.b
+        byq: dict[int, list[tuple[float, int]]] = {}
+        for o, tbl in segs_by_ord.items():
+            segs: dict[str, list[dict]] = {}
+            for r in tbl.to_pylist():
+                segs.setdefault(r["term"], []).append(r)
+            rows_of: dict[int, list[dict]] = {}
+            for qid, t, idf_v, avg in present:
+                for seg in segs.get(t, ()):
+                    rows_of.setdefault(qid, []).append(
+                        {**seg, "idf": idf_v, "avgdl": avg}
+                    )
+            bs = int(self._dir_stats[o].get("block_size") or 128)
+            dead = self._dead_by_ord.get(o)
+            for qid, rows in rows_of.items():
+                hits = _wand_group_hits(
+                    rows, k_local, k1, b, self.avgdl, bs, dead=dead,
+                    after=None if after is None else after.get(qid),
+                )
+                byq.setdefault(qid, []).extend((s, d) for d, s in hits)
+        return _merge_pages(byq, k_local, from_)
 
     # the ES-coordinator merge bound: partial top-k lists up to this
     # many rows (k × ranges × dirs × queries — NEVER corpus-sized) are
@@ -924,14 +1088,9 @@ class QueryEngine:
         byq: dict[int, list[tuple[float, int]]] = {}
         for r in partials.select("query_id", "doc_id", "score").collect():
             byq.setdefault(r[0], []).append((r[2], r[1]))
-        rows = []
-        for qid in sorted(byq):
-            lst = byq[qid]
-            lst.sort(key=lambda sd: (-sd[0], sd[1]))
-            for rank in range(from_ + 1, min(k_local, len(lst)) + 1):
-                s, d = lst[rank - 1]
-                rows.append((qid, rank, d, s))
-        return local_rows_df(self.spark, rows, schema=TOPK_SCHEMA)
+        return local_rows_df(
+            self.spark, _merge_pages(byq, k_local, from_), schema=TOPK_SCHEMA
+        )
 
     def _doc_ranges(self, n_ranges: int) -> list[tuple[int, int, int]]:
         """(range_id, lo, hi_exclusive) splits of [min_doc, max_doc] —
@@ -948,23 +1107,18 @@ class QueryEngine:
     def _ranged(self, matched: DataFrame, n_ranges: int) -> DataFrame:
         """Attach each overlapping doc-range to the matched segments,
         so a segment's bytes only reach the ranges its docs can fall
-        in. The range table is a pure function of (min_doc, max_doc,
-        n_ranges), all driver-known — it is generated IN-PLAN with one
-        sequence/filter/explode expression instead of a broadcast
-        nested-loop join (no broadcast exchange, no build job; guide
-        §2.4). Range edges replicate :meth:`_doc_ranges` exactly
-        (floor division of non-negative operands), and empty ranges
-        are excluded by the span guard as before."""
-        lo, hi = self.min_doc, self.max_doc + 1
-        span = hi - lo
+        in. The range table is :meth:`_doc_ranges` (computed on the
+        driver in Python integers, exact for any int64 id span),
+        inlined IN-PLAN as a literal array of structs with one
+        filter/explode expression instead of a broadcast nested-loop
+        join (no broadcast exchange, no build job; guide §2.4)."""
+        arr = ", ".join(
+            f"named_struct('range_id', {r}, 'range_lo', {lo}L, "
+            f"'range_hi', {hi}L)"
+            for r, lo, hi in self._doc_ranges(n_ranges)
+        )
         r = (
-            f"explode(filter(transform(sequence(0, {n_ranges - 1}), r -> "
-            f"named_struct("
-            f"'range_id', r, "
-            f"'range_lo', {lo}L + ({span}L * cast(r as long)) div {n_ranges}, "
-            f"'range_hi', {lo}L + ({span}L * (cast(r as long) + 1)) div {n_ranges})), "
-            f"s -> s.range_hi > s.range_lo"
-            f" AND first_doc < s.range_hi"
+            f"explode(filter(array({arr}), s -> first_doc < s.range_hi"
             f" AND element_at(block_last_doc, -1) >= s.range_lo))"
         )
         return matched.withColumn("_r", F.expr(r)).select(
@@ -3261,9 +3415,9 @@ class QueryEngine:
                     i = np.searchsorted(e["docs"], sdocs)
                     tf = e["tfs"][i].astype(np.float64)
                     dl = e["dls"][i].astype(np.float64)
-                    score += idf[t] * tf * (k1 + 1.0) / (
+                    score += idf[t] * (tf * (k1 + 1.0) / (
                         tf + k1 * (1.0 - b + b * dl / avg[t])
-                    )
+                    ))
                 return sdocs, score
 
             if alts is not None:
@@ -3937,6 +4091,30 @@ class QueryEngine:
         ``field^boost`` multiplier, applied at cursor level so every
         downstream path (sum, WAND, dis_max agg) sees boosted
         contributions."""
+        qt = self._query_terms(
+            queries, fuzziness, field, fields, prefix_expansions,
+            field_boosts, blend_df, per_field_qids,
+        )
+        if qt is None:
+            return None
+        meta, present = qt
+        return self._attach_query_terms(self._pruned_postings(meta), present)
+
+    def _query_terms(
+        self,
+        queries: list[tuple[int, str]],
+        fuzziness: int = 0,
+        field: str | None = None,
+        fields: list[str] | None = None,
+        prefix_expansions: int | None = None,
+        field_boosts: dict | None = None,
+        blend_df: bool = False,
+        per_field_qids: bool = False,
+    ) -> tuple[dict[str, dict], list[tuple]] | None:
+        """The driver-side part of :meth:`_matched_segments`: the
+        query terms' dictionary meta and the (query_id, term, idf,
+        avgdl) rows of the terms present in the index, or None when
+        no query term is."""
         flist = fields if fields is not None else [field]
         boosts = field_boosts or {}
         # per_field_qids: emit qid·|fields|+field_index so downstream
@@ -4004,7 +4182,7 @@ class QueryEngine:
         ]
         if not present:
             return None
-        return self._attach_query_terms(self._pruned_postings(meta), present)
+        return meta, present
 
     # segments × query-terms attach: above this many (query, term)
     # rows the literal map expression stops being worth parsing and
@@ -6232,8 +6410,8 @@ def bm25_topk_dataframe(
         .withColumn(
             "contrib",
             F.log(1.0 + (n - F.col("df") + 0.5) / (F.col("df") + 0.5))
-            * F.col("tf") * (cfg.k1 + 1.0)
-            / (F.col("tf") + cfg.k1 * (1.0 - cfg.b + cfg.b * F.col("dl") / avgdl)),
+            * (F.col("tf") * (cfg.k1 + 1.0)
+               / (F.col("tf") + cfg.k1 * (1.0 - cfg.b + cfg.b * F.col("dl") / avgdl))),
         )
         .drop("_n", "_avgdl")
         .groupBy("query_id", "doc_id")

@@ -78,9 +78,10 @@ class TermCursor:
         self._load_block(0)
 
     def _contrib(self, tf, dl):
-        return self.idf * tf * (self.k1 + 1.0) / (
+        # idf * saturation, evaluated in pyref's order (bit-equal)
+        return self.idf * (tf * (self.k1 + 1.0) / (
             tf + self.k1 * (1.0 - self.b + self.b * dl / self.avgdl)
-        )
+        ))
 
     def _load_block(self, bi: int):
         if bi >= self.n_blocks:
