@@ -270,13 +270,17 @@ def test_tombstone_growth_guard(spark, tmp_path):
 
 
 def test_search_after_rank_anchored_survives_ulp_drift(spark, tmp_path):
-    """The cursor must be anchored on the cursor DOC's position in the
+    """On the hash-aggregate bool path (engine-ordered float sums) the
+    cursor must be anchored on the cursor DOC's position in the
     current job's ranking, not on bit-exact float equality with the
     fed-back score: a one-ulp perturbation of the cursor score (the
     cross-job F.sum accumulation-order drift the round-3 ADVICE
     flagged) must neither skip nor duplicate boundary docs. Also:
     paging the whole ranking by cursor reproduces it exactly, and a
-    VANISHED cursor doc falls back to the fed ordering key."""
+    VANISHED cursor doc falls back to the fed ordering key. The WAND
+    paths (``topk_distributed``) sum in the pinned order, so their
+    cursor is the exact fed-back key and pages reproduce the ranking
+    too."""
     import math
 
     cfg = IndexConfig(n_groups=2, block_size=32)
@@ -287,6 +291,12 @@ def test_search_after_rank_anchored_survives_ulp_drift(spark, tmp_path):
     IndexBuilder(spark, cfg).build(spark.createDataFrame(pdf), idx)
     eng = QueryEngine(spark, idx)
     q = [(1, "alpha"), (2, "beta")]
+
+    def rich(qid, **kw):
+        # a clause-list spec keeps bool_topk on the hash-aggregate path
+        spec = {"should": [{"match": dict(q)[qid]}]}
+        return eng.bool_topk([(qid, spec)], **kw).toPandas()
+
     full = eng.topk_distributed(q, k=40).toPandas().sort_values(
         ["query_id", "rank"]
     )
@@ -298,7 +308,7 @@ def test_search_after_rank_anchored_survives_ulp_drift(spark, tmp_path):
         got, cur = [], None
         while True:
             kw = {"search_after": {qid: cur}} if cur else {}
-            page = eng.topk_distributed([(qid, dict(q)[qid])], k=7, **kw).toPandas()
+            page = rich(qid, k=7, **kw)
             if page.empty:
                 break
             got += list(page["doc_id"])
@@ -306,6 +316,16 @@ def test_search_after_rank_anchored_survives_ulp_drift(spark, tmp_path):
             drifted = math.nextafter(s, math.inf if len(got) % 2 else -math.inf)
             cur = (drifted, int(page["doc_id"].iat[-1]))
         assert got == want  # no skips, no duplicates, full coverage
+        # exact-key cursor on the WAND path
+        got, cur = [], None
+        while True:
+            kw = {"search_after": {qid: cur}} if cur else {}
+            page = eng.topk_distributed([(qid, dict(q)[qid])], k=7, **kw).toPandas()
+            if page.empty:
+                break
+            got += list(page["doc_id"])
+            cur = (float(page["score"].iat[-1]), int(page["doc_id"].iat[-1]))
+        assert got == want
 
     # vanished cursor doc (id not in the index): fed-key ordering
     # fallback. Single-term docs → one addend per score → recompute
@@ -321,11 +341,14 @@ def test_search_after_rank_anchored_survives_ulp_drift(spark, tmp_path):
     eng2 = QueryEngine(spark, idx2)
     full2 = eng2.topk_distributed([(1, "alpha")], k=30).toPandas().sort_values("rank")
     s10 = float(full2.score.iat[9])
-    nxt = eng2.topk_distributed(
-        [(1, "alpha")], k=30, search_after={1: (s10, 10**9)}
-    ).toPandas().sort_values("rank")
     want = list(full2[full2.score < s10]["doc_id"])
-    assert list(nxt["doc_id"]) == want
+    for nxt in (
+        eng2.bool_topk([(1, {"should": [{"match": "alpha"}]})], k=30,
+                       search_after={1: (s10, 10**9)}),
+        eng2.topk_distributed([(1, "alpha")], k=30,
+                              search_after={1: (s10, 10**9)}),
+    ):
+        assert list(nxt.toPandas().sort_values("rank")["doc_id"]) == want
 
 
 def test_fielded_md5_injective_on_separator_bytes(spark, tmp_path):

@@ -429,12 +429,25 @@ def test_script_score(spark, idx):
     want_inv = sorted(((d, 1.0 / s) for d, s in zip(base.doc_id, base.score)),
                       key=lambda x: (-x[1], x[0]))
     assert list(inv.doc_id) == [d for d, _ in want_inv]
-    # rejection matrix (Math.log10 pinned by round-6 ADVICE: it must
-    # fail the whitelist with the documented ValueError, not slip
-    # through as ln10 and die at analysis)
+    # Painless spellings: whitespace before the paren, Math.log10 → SQL
+    # log10 (never ln10)
+    for src, fn in (("_score * Math.log (doc['n_chars'].value)", math.log),
+                    ("_score * Math.log10(doc['n_chars'].value)", math.log10),
+                    ("_score * Math.sqrt\t(doc['n_chars'].value)", math.sqrt)):
+        got = es_search(e, {"query": {"script_score": {
+            "query": {"match": {"text": "alpha"}}, "script": src}},
+            "size": 100}).toPandas()
+        want = sorted(((d, s * fn(nch[d]))
+                       for d, s in zip(base.doc_id, base.score)),
+                      key=lambda x: (-x[1], x[0]))
+        assert list(got.doc_id) == [d for d, _ in want], src
+        np.testing.assert_allclose(got.score, [s for _, s in want], rtol=1e-9)
+    # rejection matrix: anything outside the whitelist raises the
+    # documented ValueError before analysis
     for bad in ["doc['n_chars'].value; import os", "_score ** 2",
                 "System.exit(0)", "params.zzz + 1",
-                "Math.log10(doc['n_chars'].value)",
+                "Math.log1p(doc['n_chars'].value)",
+                "Math.pow(_score, 2)", "_score // 2",
                 "Math.sqrt2 * _score"]:
         with pytest.raises(ValueError):
             es_search(e, {"query": {"script_score": {

@@ -153,21 +153,28 @@ def test_bool_topk_plan_one_agg_no_extra_shuffle(spark, tmp_path):
     """The bool query's role machinery must not add passes: every
     occurrence type rides the ONE pruned scan + decode, the role/need
     tables join broadcast, and the only hash shuffles are the
-    (query_id, doc_id) aggregation and the per-query top-k window."""
+    (query_id, doc_id) aggregation and the per-query top-k window.
+    A structured filter keeps the spec on this hash-aggregate path;
+    the same spec without it is a flat text-only bool, answered by
+    the WAND executor on the coordinator with no Spark plan at all."""
     from xml_to_es_spark.config import IndexConfig
     from xml_to_es_spark.operators.index_build import IndexBuilder
     from xml_to_es_spark.operators.query_engine import QueryEngine
 
     docs = spark.createDataFrame(
         pd.DataFrame(
-            {"doc_id": range(30), "text": [f"alpha beta w{i} tail" for i in range(30)]}
+            {"doc_id": range(30), "text": [f"alpha beta w{i} tail" for i in range(30)],
+             "lang": [("en", "de")[i % 2] for i in range(30)]}
         )
     )
     idx = str(tmp_path / "bool_idx")
-    IndexBuilder(spark, IndexConfig(n_groups=2)).build(docs, idx)
+    IndexBuilder(
+        spark, IndexConfig(n_groups=2, stored_fields=("lang",))
+    ).build(docs, idx)
     eng = QueryEngine(spark, idx)
+    spec = {"must": "alpha", "should": "tail", "must_not": "beta"}
     out = eng.bool_topk(
-        [(1, {"must": "alpha", "should": "tail", "must_not": "beta"})], k=5
+        [(1, {**spec, "filter": [{"term": {"lang": "en"}}]})], k=5
     )
     plan = explain_str(out, "simple")  # each node appears exactly once
     assert_no_cartesian(out)
@@ -178,6 +185,8 @@ def test_bool_topk_plan_one_agg_no_extra_shuffle(spark, tmp_path):
     # role and clause-count tables must NOT induce extra exchanges
     assert plan.count("Exchange hashpartitioning") <= 2
     assert "WindowGroupLimit" in plan
+    flat = explain_str(eng.bool_topk([(1, spec)], k=5), "simple")
+    assert "MapInPandas" not in flat and "Exchange" not in flat
 
 
 def test_mapping_stays_projection(spark):
@@ -372,7 +381,10 @@ def test_nested_bool_tree_plan_single_scan(spark, tmp_path):
     ).build(docs, idx)
     eng = QueryEngine(spark, idx)
 
-    flat = explain_str(eng.bool_topk([(1, {"must": "alpha"})], k=5))
+    # track_total_hits keeps the flat spec on the hash-aggregate path
+    flat = explain_str(
+        eng.bool_topk([(1, {"must": "alpha"})], k=5, track_total_hits=True)
+    )
     tree = explain_str(eng.bool_topk([(1, {
         "must": [{"match": "alpha"}],
         "should": [
@@ -435,7 +447,10 @@ def test_function_score_and_composite_plans(spark, tmp_path):
         {"weight": 2.0, "filter": {"term": {"lang": "en"}}},
     ]
 
-    base = explain_str(eng.bool_topk(q, k=5), "simple")
+    # the flat bool match set function_score builds on: track_total_hits
+    # keeps bool_topk on that hash-aggregate path (a count window over
+    # the rank window's partitioning, no extra agg, join or decode)
+    base = explain_str(eng.bool_topk(q, k=5, track_total_hits=True), "simple")
     fs = explain_str(
         eng.function_score_topk(q, funcs, k=5, score_mode="sum"), "simple"
     )

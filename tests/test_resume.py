@@ -139,3 +139,33 @@ def test_resume_rejects_changed_input(spark, docs_df, tmp_path):
     # and an upsert of the same changed input is a no-op (md5 match)
     res2 = b.upsert(changed, out)
     assert res2["mode"] == "noop"
+
+
+def test_committed_builds_keep_no_tokens(spark, docs_df, tmp_path):
+    """The tokenized intermediate is gone once a build commits its last
+    group — fresh, resumed, upsert delta and compaction alike — and an
+    unfinished build keeps it so resume still works."""
+    from pathlib import Path
+
+    import pyspark.sql.functions as F
+
+    b = IndexBuilder(spark, IndexConfig(n_groups=2))
+    out = tmp_path / "idx"
+    b.build(docs_df, str(out))
+    assert (out / "postings").exists() and not (out / "tokens").exists()
+
+    part = tmp_path / "part"
+    with pytest.raises(RuntimeError, match="injected failure"):
+        b.build(docs_df, str(part), fail_after_groups=1)
+    assert (part / "tokens").exists()
+    assert b.build(docs_df, str(part), resume=True)["groups_built"] == 1
+    assert not (part / "tokens").exists()
+
+    patch = docs_df.limit(5).withColumn(
+        "text", F.concat(F.col("text"), F.lit(" extraword"))
+    )
+    res = b.upsert(patch, str(out))
+    assert res["mode"] == "delta"
+    assert not (Path(res["delta_dir"]) / "tokens").exists()
+    b.compact(str(out), str(tmp_path / "compacted"))
+    assert not (tmp_path / "compacted" / "tokens").exists()

@@ -257,3 +257,38 @@ def test_nested_inner_hits(spark, tmp_path_factory):
         es_search(e, {"query": {"nested": {
             "path": "tags", "inner_hits": {"size": 2},
             "query": {"range": {"tags.k": {"gte": 2}}}}}, "size": 3})
+
+
+def test_positional_queries_rejected_before_any_job(spark, tmp_path):
+    """On an index built without positions every positional query
+    kind raises ValueError on the driver before a Spark job starts
+    (it used to fail inside a Python worker, mid-job)."""
+    pdf = pd.DataFrame({"doc_id": range(len(DOCS)), "text": DOCS})
+    idx = str(tmp_path / "nopos")
+    IndexBuilder(spark, IndexConfig(n_groups=2)).build(
+        spark.createDataFrame(pdf), idx
+    )
+    e = QueryEngine(spark, idx)
+    calls = {
+        "phrase": lambda: e.phrase_topk([(1, "a b")]),
+        "phrase_prefix": lambda: e.phrase_prefix_topk([(1, "a b")]),
+        "span_or": lambda: e.span_or_topk([(1, ["a b", "c"])]),
+        "span_not": lambda: e.span_not_topk([(1, ("a", "q a"))]),
+        "intervals": lambda: e.intervals_topk([(1, "a b")], max_gaps=1),
+        "intervals_any": lambda: e.intervals_any_topk([(1, ["a b", "c a"])]),
+        "bool_phrase_leaf": lambda: e.bool_topk([(1, {
+            "must": [{"match_phrase": {"query": "a b"}}],
+            "should": [{"match": "c"}]})]),
+    }
+    sc = spark.sparkContext
+    try:
+        for name, call in calls.items():
+            sc.setJobGroup(f"positional-{name}", name)
+            with pytest.raises(ValueError, match="store_positions"):
+                call().collect()
+            assert sc.statusTracker().getJobIdsForGroup(
+                f"positional-{name}") == [], name
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the index still answers non-positional queries
+    assert e.topk_wand([(1, "a b")], k=3).count() == 3

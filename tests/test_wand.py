@@ -168,3 +168,112 @@ def test_wand_empty_and_single():
         [{"term": "x", "idf": 1.5, "segments": [seg]}], 10, 1.2, 0.75, 100.0, 16
     )
     assert len(got) == 1 and got[0][0] == 5
+
+
+@settings(max_examples=60, deadline=None)
+@given(
+    seed=st.integers(min_value=0, max_value=10_000),
+    k=st.integers(min_value=1, max_value=15),
+    min_match=st.integers(min_value=0, max_value=4),
+    n_dead=st.integers(min_value=0, max_value=30),
+    use_after=st.booleans(),
+    n_ranges=st.integers(min_value=1, max_value=3),
+    no_required=st.booleans(),
+)
+def test_wand_roles_property(
+    seed, k, min_match, n_dead, use_after, n_ranges, no_required
+):
+    """Property: required / excluded / weighted / optional cursors with
+    a min_match count, plus tombstones, a search_after key and a
+    doc-range split, give exactly the brute-force top-k (rank and
+    bit-equal score: the same term-lexicographic sum, each term added
+    ``weight`` times)."""
+    rng = np.random.RandomState(seed)
+    entries, _, avgdl = _make_corpus(
+        rng, n_docs=200, n_terms=7, salted=seed % 2 == 0
+    )
+    cfg = BM25Config()
+    # role per term: optional, required scored, filter (required,
+    # weight 0), must+should (required, weight 2), excluded
+    kinds = (["opt", "opt", "excl"] if no_required
+             else ["opt", "req", "filter", "dual", "excl"])
+    q = []
+    for i in rng.choice(len(entries), rng.randint(1, 6), replace=False):
+        e = dict(entries[i])
+        kind = kinds[rng.randint(len(kinds))]
+        e.update(
+            required=kind in ("req", "filter", "dual"),
+            excluded=kind == "excl",
+            weight={"filter": 0, "dual": 2, "excl": 0}.get(kind, 1),
+        )
+        q.append(e)
+    dead = (
+        np.unique(rng.choice(200, size=n_dead)).astype(np.int64)
+        if n_dead else None
+    )
+    from xml_to_es_spark.operators.postings import decode_segment
+
+    holds: dict[str, dict[int, float]] = {}
+    for e in q:
+        holds[e["term"]] = {}
+        for seg in e["segments"]:
+            d, tf, dl = decode_segment(seg)
+            contrib = e["idf"] * saturation(tf, dl, avgdl, cfg)
+            holds[e["term"]].update(zip(d.tolist(), contrib.tolist()))
+    has_req = any(e["required"] for e in q)
+    need = min_match if has_req else max(min_match, 1)
+    truth = {}
+    for doc in range(201):
+        if dead is not None and doc in set(dead.tolist()):
+            continue
+        if any(e["required"] and doc not in holds[e["term"]] for e in q):
+            continue
+        if any(e["excluded"] and doc in holds[e["term"]] for e in q):
+            continue
+        n_opt = sum(
+            doc in holds[e["term"]]
+            for e in q if not (e["required"] or e["excluded"])
+        )
+        if n_opt < need or not (has_req or n_opt):
+            continue
+        s = 0.0
+        for e in sorted(q, key=lambda e: e["term"]):
+            if doc in holds[e["term"]]:
+                for _ in range(e["weight"]):
+                    s += holds[e["term"]][doc]
+        truth[doc] = s
+    ranked = sorted(truth.items(), key=lambda kv: (-kv[1], kv[0]))
+    after = None
+    if use_after and len(ranked) > 2:
+        d0, s0 = ranked[len(ranked) // 3]
+        after = (s0, d0)
+        ranked = ranked[len(ranked) // 3 + 1:]
+    expect = ranked[:k]
+    edges = [round(200 * r / n_ranges) for r in range(n_ranges)] + [201]
+    partials = []
+    for lo, hi in zip(edges, edges[1:]):
+        partials += wand_topk(
+            q, k, cfg.k1, cfg.b, avgdl, block_size=32, doc_lo=lo, doc_hi=hi,
+            dead=dead, after=after, min_match=min_match,
+        )
+    merged = sorted(partials, key=lambda t: (-t[1], t[0]))[:k]
+    assert merged == expect
+
+
+def test_wand_required_term_without_segments_matches_nothing():
+    """A required term with no postings (absent from the corpus or from
+    this dir) empties the page instead of being dropped."""
+    seg = encode_segment(
+        np.array([5, 9], dtype=np.int64),
+        np.array([3, 1], dtype=np.int64),
+        np.array([50, 40], dtype=np.int64),
+        16,
+    )
+    seg["salt"] = 0
+    x = {"term": "x", "idf": 1.5, "segments": [seg]}
+    assert len(wand_topk([x], 10, 1.2, 0.75, 100.0, 16)) == 2
+    absent = {"term": "y", "idf": 0.0, "segments": [], "required": True}
+    assert wand_topk([x, absent], 10, 1.2, 0.75, 100.0, 16) == []
+    # two optional terms needed, one has no postings
+    assert wand_topk([x, {"term": "y", "idf": 0.0, "segments": []}], 10,
+                     1.2, 0.75, 100.0, 16, min_match=2) == []

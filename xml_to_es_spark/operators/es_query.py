@@ -257,10 +257,10 @@ def _parse_simple_query(text: str) -> dict:
 def _compile_script_score(source: str, params: dict) -> tuple[str, list]:
     """Painless ARITHMETIC-LITERAL subset → one Spark SQL expression:
     ``_score``, ``doc['field'].value``, ``params.x`` (numeric),
-    numeric literals, ``+ - * / ( )``, ``Math.log`` (→ ln) and
-    ``Math.sqrt``. Returns (sql_expr, doc-value columns). Anything
-    outside the whitelist raises — the repo's nothing-silently-ignored
-    contract for scripts."""
+    numeric literals, ``+ - * / ( )``, ``Math.log`` (→ ln),
+    ``Math.log10`` (→ log10) and ``Math.sqrt``. Returns (sql_expr,
+    doc-value columns). Anything outside the whitelist raises — the
+    repo's nothing-silently-ignored contract for scripts."""
     import re as _re2
 
     cols = _re2.findall(r"doc\['(\w+)'\]\.value", source)
@@ -277,15 +277,16 @@ def _compile_script_score(source: str, params: dict) -> tuple[str, list]:
         return f"({float(params[name])!r})"
 
     expr = _re2.sub(r"params\.(\w+)", sub_param, expr)
-    # whole function tokens only: Math.log10 must NOT rewrite to ln10
-    # and then slip through the leftover strip (round-6 ADVICE) — it
-    # stays Math.log10 and fails the whitelist below with the
-    # documented ValueError instead of an opaque AnalysisException
-    expr = _re2.sub(r"\bMath\.log\(", "ln(", expr)
-    expr = _re2.sub(r"\bMath\.sqrt\(", "sqrt(", expr)
+    # whole function tokens only (Painless allows whitespace before
+    # the paren): Math.log10 maps to SQL log10, never to ln10, and
+    # any other Math.* name stays put and fails the whitelist below
+    # with the documented ValueError instead of an AnalysisException
+    expr = _re2.sub(r"\bMath\.log10\s*\(", "log10(", expr)
+    expr = _re2.sub(r"\bMath\.log\s*\(", "ln(", expr)
+    expr = _re2.sub(r"\bMath\.sqrt\s*\(", "sqrt(", expr)
     expr = _re2.sub(r"\b_score\b", "(cast(`_score` as double))", expr)
     leftover = _re2.sub(
-        r"\(cast\(`\w+` as double\)\)|\bln\(|\bsqrt\(|[\s0-9.+\-*/()]",
+        r"\(cast\(`\w+` as double\)\)|\b(?:log10|ln|sqrt)\(|[\s0-9.+\-*/()]",
         "", expr,
     )
     if leftover or "**" in expr or "//" in expr:
@@ -293,7 +294,7 @@ def _compile_script_score(source: str, params: dict) -> tuple[str, list]:
             f"unsupported script syntax "
             f"{(leftover or '** or //')!r} — the supported "
             "subset is _score, doc['field'].value, params.x, numeric "
-            "literals, + - * / ( ), Math.log, Math.sqrt"
+            "literals, + - * / ( ), Math.log, Math.log10, Math.sqrt"
         )
     try:
         F.expr(expr)
@@ -748,14 +749,9 @@ class EsRequest:
             mm = opts.get("minimum_should_match")
             if opts.get("operator", "or").lower() == "and":
                 mm = "all"
-            if mm is not None:
-                return eng.topk_distributed(
-                    [(0, opts["query"])], k=k, field=f, from_=from_,
-                    min_match=mm, search_after=cursor and cursor,
-                )
             return eng.topk_wand(
                 [(0, opts["query"])], k=k, field=f, from_=from_,
-                search_after=cursor,
+                search_after=cursor, min_match=mm,
             )
         if kind == "match_phrase":
             fld, opts = _field_text(spec, allowed={"slop"})

@@ -234,6 +234,14 @@ def live_docs(spark: SparkSession, index_dir: str) -> DataFrame:
     return all_docs
 
 
+def _drop_tokens(out: Path) -> None:
+    """Remove a build's tokenized intermediate once its last group is
+    committed: queries never read it, and only an unfinished build
+    needs it to resume."""
+    if (out / "tokens").exists():
+        shutil.rmtree(out / "tokens")
+
+
 def _encode_stream(cfg_block: int, with_positions: bool = False):
     """mapInPandas kernel: partition sorted by (term, salt, doc_id) →
     one output row per (term, salt) segment. Carries the trailing
@@ -742,6 +750,7 @@ class IndexBuilder:
                 for r in self._pending_manifest
             ]
             self._flush_manifest(out)
+            _drop_tokens(out)
             return {
                 "groups_built": self.cfg.n_groups,
                 "snapshot": snapshot,
@@ -783,6 +792,7 @@ class IndexBuilder:
                 raise RuntimeError(f"injected failure after {built} groups")
             self._build_group(out, g, id_range, snapshot)
             built += 1
+        _drop_tokens(out)
         return {
             "groups_built": built,
             "snapshot": snapshot,
@@ -1235,6 +1245,7 @@ class IndexBuilder:
         st = spark.read.parquet(str(out / "stats")).first()
         self._build_all_groups(out, (int(st["min_doc"]), int(st["max_doc"])), snapshot)
         self._flush_manifest(out)
+        _drop_tokens(out)
         return {
             "mode": "compact",
             "dirs_merged": len(dirs),

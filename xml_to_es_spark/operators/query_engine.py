@@ -14,21 +14,21 @@ Physical query plan (scale-first):
   4. postings scan filtered the same way, joined to the BROADCAST
      query-term table (broadcast hash join — never a shuffle of the
      postings side);
-  5. an Arrow-batched kernel decodes each matched segment (numpy) and
+  5. top-k: block-max WAND (``operators/wand.py``) per (query,
+     dir[, range]) — OR ``match``, ``operator: and`` /
+     minimum_should_match and flat bool specs (required, excluded
+     and optional cursors) — skipping blocks whose upper bound cannot
+     beat the running threshold, and summing in the pinned order
+     (term-major lexicographic — identical to pyref, so scores are
+     bit-equal);
+  6. WAND batches under a posting-volume bound on a local index skip
+     the Spark job: the driver reads the pruned segments with pyarrow
+     and runs the same kernel (``_wand_coordinator``);
+  7. the hash-aggregate paths (rich bool trees, structured filters,
+     aggregations) decode segments in an Arrow-batched kernel that
      emits (query_id, doc_id, contrib) — doc lengths are co-located
-     in the posting (dls_bin) so scoring needs NO join to a 10^12-row
-     docs table;
-  6. block-max pruning: when a running score threshold is known
-     (single-term queries: k-th best so far is a valid bound), blocks
-     whose upper bound is below it are skipped without decoding;
-  7. top-k: exact summation path groups per query and sums in the
-     pinned order (term-major lexicographic, doc-major within term —
-     identical to pyref, so scores are bit-equal); the distributed
-     path is partial-agg sum + TakeOrderedAndProject with a final
-     deterministic re-sum of the top candidates.
-  8. block-max WAND batches under a posting-volume bound on a local
-     index skip the Spark job: the driver reads the pruned segments
-     with pyarrow and runs the same kernel (``_wand_coordinator``).
+     in the posting (dls_bin), so scoring needs NO join to a
+     10^12-row docs table — and aggregate in the JVM.
 
 Tie-break doc_id ASC everywhere (mandatory for rank-identity).
 """
@@ -63,6 +63,12 @@ _SEG_COLS = (
 )
 
 
+# WAND cursor roles per query_id: ({stored term: (required, excluded,
+# weight)}, min_match) — see wand.wand_topk. A query without an entry
+# is the plain OR match.
+Roles = dict[int, tuple[dict[str, tuple[bool, bool, int]], int]]
+
+
 def _sql_str(s: str) -> str:
     """A Python string as a safely-escaped Spark SQL string literal
     (terms are analyzer tokens, but escape defensively anyway)."""
@@ -74,16 +80,19 @@ def _stats_row_local(path: str) -> dict | None:
     only); None routes the caller to the Spark read."""
     if "://" in path and not path.startswith("file:"):
         return None
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     p = path[len("file:"):] if path.startswith("file:") else path
     try:
-        import pyarrow.parquet as pq
-
         t = pq.read_table(p)
-        if t.num_rows < 1:
-            return None
-        return {c: t.column(c)[0].as_py() for c in t.column_names}
-    except Exception:
+    except (OSError, pa.ArrowException):
+        logger.debug("stats: local read of %s failed; Spark reads it", p,
+                     exc_info=True)
         return None
+    if t.num_rows < 1:
+        return None
+    return {c: t.column(c)[0].as_py() for c in t.column_names}
 
 
 def _dead_mask(doc_ids: np.ndarray, dead: np.ndarray | None) -> np.ndarray | None:
@@ -113,11 +122,15 @@ def _wand_group_hits(
     after: tuple[float, int] | None = None,
     doc_lo: int | None = None,
     doc_hi: int | None = None,
+    roles: tuple[dict, int] | None = None,
 ) -> list[tuple[int, float]]:
     """The WAND kernel body shared by the Spark and coordinator paths:
     one (query, dir[, range]) group's matched segment rows (each with
     term, idf, avgdl and the :data:`_SEG_COLS` columns) → its local
-    block-max WAND top-k [(doc_id, score)]."""
+    block-max WAND top-k [(doc_id, score)]. ``roles`` is the query's
+    entry in a :data:`Roles` map; every term it names becomes a
+    cursor, with no segments when the group holds none of its
+    postings (so a required term missing here empties the page)."""
     from xml_to_es_spark.operators.wand import wand_topk
 
     entries: dict[str, dict] = {}
@@ -132,9 +145,16 @@ def _wand_group_hits(
             },
         )
         e["segments"].append({c: r[c] for c in _SEG_COLS})
+    min_match = 0
+    if roles is not None:
+        term_roles, min_match = roles
+        for t, (required, excluded, weight) in term_roles.items():
+            e = entries.setdefault(t, {"term": t, "idf": 0.0, "segments": []})
+            e.update(required=required, excluded=excluded, weight=weight)
     return wand_topk(
         list(entries.values()), k, k1, b, avgdl, block_size,
         doc_lo=doc_lo, doc_hi=doc_hi, dead=dead, after=after,
+        min_match=min_match,
     )
 
 
@@ -241,36 +261,6 @@ def _term_docs_segments(dead_by_ord=None):
                     "doc_id": np.concatenate(out_d),
                 }
             )
-
-    return run
-
-
-def _topk_reduce(k: int):
-    """applyInPandas per query: pinned-order summation (sort by term
-    then doc_id → per-doc addition happens term-major, matching
-    pyref), then top-k by (-score, doc_id)."""
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(pdf):
-            return pd.DataFrame(
-                {"query_id": [], "rank": [], "doc_id": [], "score": []}
-            )
-        pdf = pdf.sort_values(["term", "doc_id"], kind="mergesort")
-        docs = pdf["doc_id"].to_numpy(dtype=np.int64)
-        contribs = pdf["contrib"].to_numpy(dtype=np.float64)
-        uniq, inv = np.unique(docs, return_inverse=True)
-        scores = np.zeros(uniq.shape, dtype=np.float64)
-        # np.add.at accumulates in array order = term-major (pinned)
-        np.add.at(scores, inv, contribs)
-        order = np.lexsort((uniq, -scores))[:k]
-        return pd.DataFrame(
-            {
-                "query_id": np.full(len(order), pdf["query_id"].iat[0], dtype=np.int64),
-                "rank": np.arange(1, len(order) + 1, dtype=np.int32),
-                "doc_id": uniq[order],
-                "score": scores[order],
-            }
-        )
 
     return run
 
@@ -432,6 +422,21 @@ def _is_rich_bool(clauses: dict) -> bool:
             ):
                 return True
     return False
+
+
+def _is_flat_text_bool(clauses: dict) -> bool:
+    """True when a bool spec is the legacy flat form with text clauses
+    only (role → token string; filter a string or a list of
+    ``{"match": text}`` clauses) — the specs :meth:`QueryEngine.bool_topk`
+    answers on the WAND executor."""
+    if _is_rich_bool(clauses):
+        return False
+    fv = clauses.get("filter")
+    return not isinstance(fv, (list, tuple)) or all(
+        isinstance(cl, dict) and list(cl) == ["match"]
+        and isinstance(cl["match"], str)
+        for cl in fv
+    )
 
 
 class QueryEngine:
@@ -785,6 +790,17 @@ class QueryEngine:
     def _avgdl_of(self, field: str | None) -> float:
         return self._avgdl_by_field[field] if field is not None else self.avgdl
 
+    def _require_positions(self, op: str) -> None:
+        """Reject a positional query on the driver, before any job,
+        when a dir's stored mapping says it holds no positions."""
+        if any(
+            st.get("store_positions") is False for st in self._dir_stats.values()
+        ):
+            raise ValueError(
+                f"{op} needs an index built with "
+                "IndexConfig(store_positions=True)"
+            )
+
     def _pruned_postings(self, meta: dict[str, dict]) -> DataFrame:
         """Union of per-dir postings scans, each pruned to the query
         terms' partition groups and term ranges, tagged with the dir
@@ -828,18 +844,12 @@ class QueryEngine:
         ``field``: score ONE analyzed field of a fielded index (ES
         ``match: {<field>: ...}``); ``fields``: several at once, summed
         (multi_match most_fields). ``from_``: ES pagination — rows
-        from_+1 .. from_+k of the full ranking, global ranks kept."""
-        matched = self._matched_segments(queries, fuzziness, field, fields)
-        if matched is None:
-            return local_rows_df(self.spark, [], schema=TOPK_SCHEMA)
-        contribs = matched.mapInPandas(
-            _score_segments(self.cfg.k1, self.cfg.b, self._dead_by_ord),
-            schema=CONTRIB_SCHEMA,
+        from_+1 .. from_+k of the full ranking, global ranks kept.
+        Answered by :meth:`topk_wand`."""
+        return self.topk_wand(
+            queries, k=k, fuzziness=fuzziness, field=field, fields=fields,
+            from_=from_,
         )
-        out = contribs.groupBy("query_id").applyInPandas(
-            _topk_reduce(from_ + k), schema=TOPK_SCHEMA
-        )
-        return out.filter(F.col("rank") > from_) if from_ else out
 
     def topk_wand(
         self,
@@ -853,11 +863,12 @@ class QueryEngine:
         prefix_expansions: int | None = None,
         search_after: dict[int, tuple[float, int]] | None = None,
         field_boosts: dict | None = None,
+        min_match: int | str | None = None,
     ) -> DataFrame:
         """Block-max WAND path: doc-at-a-time evaluation skipping
         blocks whose upper bound cannot beat the running threshold —
-        skipped blocks are never decompressed. Rank-identical to
-        topk().
+        skipped blocks are never decompressed. Scores are the pinned
+        term-lexicographic sum, rank-identical and bit-equal to pyref.
 
         ``n_ranges=None``: one task per query (fine for query batches).
         ``n_ranges=R``: the SCALE path — the doc_id space is split into
@@ -878,6 +889,15 @@ class QueryEngine:
         token expands to the terms it prefixes (see
         :meth:`prefix_topk`).
 
+        ``min_match``: ES minimum_should_match — a doc must contain at
+        least this many of the query's distinct tokens (an int or an ES
+        percentage string such as ``"75%"``, counted over all tokens,
+        present in the corpus or not); ``"all"`` is ES ``operator:
+        and``. On one field, a count equal to the token count makes
+        every token a required cursor, so a token absent from the
+        whole corpus matches nothing. With ``fields`` the count runs
+        over the matched (field, token) terms.
+
         ``search_after``: ES cursor pagination — per query_id the
         (score, doc_id) of the last hit served. WAND scores are the
         pinned deterministic sum (bit-stable across jobs), so the
@@ -894,6 +914,11 @@ class QueryEngine:
         answered on the driver (:meth:`_wand_coordinator`) with no
         Spark job; ``n_ranges`` applies only on the Spark side, which
         serves everything else. Both sides return identical rows."""
+        if min_match is not None and (fuzziness or prefix_expansions):
+            raise ValueError(
+                "min_match cannot be combined with fuzziness or prefix "
+                "expansion (expanded variants are scored disjunctively)"
+            )
         qt = self._query_terms(
             queries, fuzziness, field, fields,
             prefix_expansions=prefix_expansions,
@@ -902,6 +927,61 @@ class QueryEngine:
         if qt is None:
             return local_rows_df(self.spark, [], schema=TOPK_SCHEMA)
         meta, present = qt
+        roles = None
+        if min_match is not None:
+            present, roles = self._min_match_roles(
+                queries, present, min_match, one_field=fields is None
+            )
+        return self._wand_run(
+            meta, present, roles, len(queries), k, from_, n_ranges,
+            search_after, "topk_wand",
+        )
+
+    def _min_match_roles(
+        self,
+        queries: list[tuple[int, str]],
+        present: list[tuple],
+        min_match: int | str,
+        one_field: bool,
+    ) -> tuple[list[tuple], Roles]:
+        """(present rows, roles) for ES minimum_should_match over
+        :meth:`_query_terms` rows. A query that cannot reach its count
+        — a required token absent from the corpus, or fewer matched
+        terms than the count — is dropped here, so it matches
+        nothing."""
+        terms_of: dict[int, set[str]] = {}
+        for qid, t, _i, _a in present:
+            terms_of.setdefault(qid, set()).add(t)
+        roles: Roles = {}
+        for qid, text in queries:
+            n = len(set(self._tokenize(text)))
+            need = _min_match_count(min_match, n)
+            terms = terms_of.get(qid, set())
+            if need > len(terms):
+                continue  # includes an `and` token missing from the corpus
+            if one_field and need == n:
+                roles[qid] = ({t: (True, False, 1) for t in terms}, 0)
+            else:
+                roles[qid] = ({t: (False, False, 1) for t in terms}, need)
+        return [r for r in present if r[0] in roles], roles
+
+    def _wand_run(
+        self,
+        meta: dict[str, dict],
+        present: list[tuple],
+        roles: Roles | None,
+        n_queries: int,
+        k: int,
+        from_: int,
+        n_ranges: int | None,
+        search_after: dict[int, tuple[float, int]] | None,
+        op: str,
+    ) -> DataFrame:
+        """The executor behind every WAND request: (query, term) rows
+        and their cursor roles → the global page, answered on the
+        coordinator or on Spark (see :meth:`topk_wand`)."""
+        if not present:
+            return local_rows_df(self.spark, [], schema=TOPK_SCHEMA)
         k_local = from_ + k  # pagination: page p needs the top from_+k
         volume = sum(meta[t]["df"] for _q, t, _i, _a in present)
         local = self._post_local_ok and all(
@@ -911,16 +991,16 @@ class QueryEngine:
             segs = self._segments_local(meta)
             if segs is not None:
                 logger.debug(
-                    "topk_wand: %d queries, %d postings on the coordinator",
-                    len(queries), volume,
+                    "%s: %d queries, %d postings on the WAND coordinator",
+                    op, n_queries, volume,
                 )
                 rows = self._wand_coordinator(
-                    segs, present, k_local, from_, search_after
+                    segs, present, k_local, from_, search_after, roles
                 )
                 return local_rows_df(self.spark, rows, schema=TOPK_SCHEMA)
         logger.debug(
-            "topk_wand: %d queries, %d postings on Spark (local=%s)",
-            len(queries), volume, local,
+            "%s: %d queries, %d postings on WAND Spark (local=%s)",
+            op, n_queries, volume, local,
         )
         matched = self._attach_query_terms(self._pruned_postings(meta), present)
         if (n_ranges and n_ranges > 1) or len(self.dirs) > 1:
@@ -928,9 +1008,9 @@ class QueryEngine:
             # doc's live contributions all sit in ONE (dir, range)
             # group, so the merge needs no re-summation
             partials = self._wand_partials(
-                matched, k_local, n_ranges or 1, search_after
+                matched, k_local, n_ranges or 1, search_after, roles
             )
-            est = len(queries) * max(n_ranges or 1, 1) * len(self.dirs) * k_local
+            est = n_queries * max(n_ranges or 1, 1) * len(self.dirs) * k_local
             if est <= self._LOCAL_MERGE_MAX:
                 return self._merge_partials_local(partials, k_local, from_)
             from pyspark.sql import Window as W
@@ -941,7 +1021,7 @@ class QueryEngine:
                 .filter((F.col("rank") > from_) & (F.col("rank") <= k_local))
                 .select("query_id", "rank", "doc_id", "score")
             )
-        run = self._wand_group_kernel(k_local, after=search_after)
+        run = self._wand_group_kernel(k_local, after=search_after, roles=roles)
         out = matched.groupBy("query_id", "ord").applyInPandas(
             run, schema=TOPK_SCHEMA
         )
@@ -952,6 +1032,7 @@ class QueryEngine:
         k: int,
         ranged: bool = False,
         after: dict[int, tuple[float, int]] | None = None,
+        roles: Roles | None = None,
     ):
         """applyInPandas kernel: one (query, dir[, range]) group →
         local block-max WAND top-k over that group's segments.
@@ -969,6 +1050,7 @@ class QueryEngine:
                 after=None if after is None else after.get(qid),
                 doc_lo=int(pdf["range_lo"].iat[0]) if ranged else None,
                 doc_hi=int(pdf["range_hi"].iat[0]) if ranged else None,
+                roles=None if roles is None else roles.get(qid),
             )
             out = {
                 "query_id": np.full(len(hits), qid, dtype=np.int64),
@@ -1041,6 +1123,7 @@ class QueryEngine:
         k_local: int,
         from_: int,
         after: dict[int, tuple[float, int]] | None,
+        roles: Roles | None = None,
     ) -> list[tuple[int, int, int, float]]:
         """The driver-side twin of the Spark WAND path over the
         segments :meth:`_segments_local` read: one WAND per
@@ -1065,6 +1148,7 @@ class QueryEngine:
                 hits = _wand_group_hits(
                     rows, k_local, k1, b, self.avgdl, bs, dead=dead,
                     after=None if after is None else after.get(qid),
+                    roles=None if roles is None else roles.get(qid),
                 )
                 byq.setdefault(qid, []).extend((s, d) for d, s in hits)
         return _merge_pages(byq, k_local, from_)
@@ -1131,10 +1215,11 @@ class QueryEngine:
         k: int,
         n_ranges: int,
         after: dict[int, tuple[float, int]] | None = None,
+        roles: Roles | None = None,
     ) -> DataFrame:
         """Per-(query, dir, range) local WAND top-k rows (pre-merge)."""
         ranged = self._ranged(matched, n_ranges)
-        run = self._wand_group_kernel(k, ranged=True, after=after)
+        run = self._wand_group_kernel(k, ranged=True, after=after, roles=roles)
         return ranged.groupBy("query_id", "ord", "range_id").applyInPandas(
             run, schema=TOPK_SCHEMA + ", range_id int"
         )
@@ -1182,16 +1267,16 @@ class QueryEngine:
         union-of-per-field-top-k path (the containment argument needs
         pure max); tie_breaker>0 routes through a full
         (query, doc, field) aggregation — sums from every matching
-        field are required, so the shape is topk_distributed's (one
-        scan, two hash-aggs, rank window), scores float-summed (not
-        the pinned order; ranks agree except on knife-edge ties).
+        field are required, so the shape is one scan, two hash-aggs
+        and a rank window, scores float-summed (not the pinned order;
+        ranks agree except on knife-edge ties).
 
         ``search_after``: ES cursor pagination. most_fields rides the
         WAND kernels' exact in-kernel cursor; best_fields with a
         cursor routes through the FULL (query, doc, field) aggregation
         (the union-of-per-field-top-k containment argument bounds
         depth by k, which a cursor page can exceed) and rank-anchors
-        like :meth:`topk_distributed`."""
+        (see :meth:`_rank_anchored_after`)."""
         if not 0.0 <= tie_breaker <= 1.0:
             raise ValueError(f"tie_breaker must be in [0, 1], got {tie_breaker}")
         parsed = [self._parse_field_boost(f) for f in (fields or self.fields)]
@@ -1636,17 +1721,27 @@ class QueryEngine:
         shuffle-join against a column-pruned scan, no new driver
         state.
 
-        One postings scan covers all roles: the broadcast query table
-        carries (query_id, term, idf, role) with idf pinned to 0 for
+        Where it runs: a batch whose specs are ALL flat and text-only
+        (role → token string; ``filter`` a string or a list of
+        ``{"match": text}`` clauses; no ``track_total_hits``) is
+        answered by the block-max WAND executor behind
+        :meth:`topk_wand` — on the coordinator or on Spark by posting
+        volume — with must/filter terms as required cursors, must_not
+        terms as excluded cursors and should terms as optional ones;
+        scores are then the pinned term-lexicographic sum. Any other
+        batch takes the hash-aggregate path below.
+
+        Hash-aggregate path — one postings scan covers all roles: the
+        broadcast query table carries (query_id, term, idf, role) with
+        idf pinned to 0 for
         non-scoring roles, so the ordinary decode kernel prices every
         row and the role aggregation is one JVM hash-agg —
         score = Σ contrib (non-scoring roles add 0.0),
         must/filter satisfied by distinct-term counts against the
         clause counts, exclusion by a max() flag. A must/filter token
         absent from the whole corpus matches nothing (ES semantics).
-        Scale shape identical to :meth:`topk_distributed`: broadcast
-        query table, term+group-pruned scans, one shuffle on
-        (query_id, doc_id), WindowGroupLimit top-k.
+        Scale shape: broadcast query table, term+group-pruned scans,
+        one shuffle on (query_id, doc_id), WindowGroupLimit top-k.
 
         RICH specs (detected per batch — see :func:`_is_rich_bool`)
         extend the clause model to real ES body shapes: role values as
@@ -1659,10 +1754,12 @@ class QueryEngine:
         + ``boost``. See :meth:`_bool_tree_match_set` for semantics
         and the one-scan/one-agg scale shape.
 
-        ``search_after``: ES cursor pagination, rank-anchored on the
-        cursor doc exactly like :meth:`topk_distributed` (bool scores
-        are engine-ordered float sums, so the cursor must not rely on
-        bit-equal re-summation).
+        ``search_after``: ES cursor pagination. On the WAND executor
+        the cursor is an EXACT (score, doc_id) sort key (the pinned
+        sums are bit-stable across calls), filtered inside the kernel;
+        on the hash-aggregate path it is rank-anchored on the cursor
+        doc (engine-ordered float sums must not rely on bit-equal
+        re-summation). Ranks restart at 1 either way.
 
         ``track_total_hits``: adds a ``total`` column — the FULL
         match-set size per query (the ES hits.total) — computed by an
@@ -1670,6 +1767,15 @@ class QueryEngine:
         the rank window, so it costs no extra shuffle."""
         from pyspark.sql import Window as W
 
+        if not track_total_hits and all(
+            _is_flat_text_bool(c) for _, c in queries
+        ):
+            meta, present, roles = self._flat_bool_roles(queries, field)
+            return self._wand_run(
+                meta, present, roles, len(queries), k, from_, None,
+                search_after, "bool_topk",
+            )
+        logger.debug("bool_topk: %d queries on the hash-agg path", len(queries))
         if any(_is_rich_bool(c) for _, c in queries):
             hits = self._bool_tree_match_set(queries, field=field, docs=docs)
         else:
@@ -1851,6 +1957,104 @@ class QueryEngine:
             page.select("query_id", "doc_id"), group_by, metrics, docs, size
         )
 
+    def _flat_bool_tokens(
+        self, qid: int, clauses: dict
+    ) -> tuple[dict[str, list[str]], list[dict]]:
+        """One legacy flat bool spec → (role → sorted distinct tokens,
+        structured filter clauses), validated: unknown roles, a token
+        in must_not and a positive role, and a must_not-only spec
+        raise ``ValueError``."""
+        bad = set(clauses) - set(self._BOOL_ROLES)
+        if bad:
+            raise ValueError(
+                f"unknown bool clause(s) {sorted(bad)}; "
+                f"expected {self._BOOL_ROLES}"
+            )
+        fval = clauses.get("filter")
+        sclauses: list[dict] = []
+        if isinstance(fval, (list, tuple)):
+            ftext_parts = []
+            for cl in fval:
+                if not (isinstance(cl, dict) and len(cl) == 1):
+                    raise ValueError(
+                        f"query {qid}: each filter clause must be a "
+                        f"single-key dict, got {cl!r}"
+                    )
+                if "match" in cl:
+                    ftext_parts.append(cl["match"])
+                else:
+                    self._structured_pred(cl)  # validate kind/bounds
+                    sclauses.append(cl)
+            ftext = " ".join(ftext_parts)
+        else:
+            ftext = fval or ""
+        toks = {
+            r: sorted(set(self._tokenize(clauses.get(r, "") or "")))
+            for r in ("must", "should", "must_not")
+        }
+        toks["filter"] = sorted(set(self._tokenize(ftext)))
+        # a token may appear in several POSITIVE roles at once
+        # (ES: must+should double-scores it, must+filter scores it
+        # once and requires it twice over — both reproduced by the
+        # per-role fan-out in _bool_agg and by the WAND cursor weight);
+        # only must_not beside a positive role is contradictory
+        contradictory = set(toks["must_not"]) & (
+            set(toks["must"]) | set(toks["should"]) | set(toks["filter"])
+        )
+        if contradictory:
+            raise ValueError(
+                f"query {qid}: token(s) {sorted(contradictory)} appear in "
+                "must_not AND a positive clause — a doc can't both "
+                "require and exclude the same term"
+            )
+        has_text = bool(toks["must"] or toks["should"] or toks["filter"])
+        if toks["must_not"] and not has_text and not sclauses:
+            raise ValueError(
+                f"query {qid}: must_not-only bool is ES match_all minus "
+                "exclusions — an unbounded corpus scan; add a must/"
+                "should/filter clause to bound the match set"
+            )
+        return toks, sclauses
+
+    def _flat_bool_roles(
+        self, queries: list[tuple[int, dict]], field: str | None
+    ) -> tuple[dict[str, dict], list[tuple], Roles]:
+        """(meta, present rows, roles) of flat text-only bool specs
+        for :meth:`_wand_run`: must and filter terms are required,
+        must_not terms excluded, and a term adds its score once per
+        scoring role it holds (must, should) — filter and must_not
+        terms carry idf 0. A query with a must/filter term absent from
+        the corpus is dropped, so it matches nothing; absent should or
+        must_not terms are ignored."""
+        fld = self._resolve_field(field)
+        avg = self._avgdl_of(fld)
+        parsed = []
+        for qid, clauses in queries:
+            toks, _ = self._flat_bool_tokens(qid, clauses)
+            parsed.append((qid, {
+                r: {self._term_of(t, fld) for t in ts} for r, ts in toks.items()
+            }))
+        terms = sorted({t for _, by in parsed for ts in by.values() for t in ts})
+        meta = self._term_meta(terms) if terms else {}
+        present: list[tuple] = []
+        roles: Roles = {}
+        for qid, by in parsed:
+            required = by["must"] | by["filter"]
+            live = {
+                t for ts in by.values() for t in ts
+                if t in meta and meta[t]["df"] > 0
+            }
+            if not required <= live:
+                continue
+            term_roles = {}
+            for t in sorted(live):
+                weight = (t in by["must"]) + (t in by["should"])
+                term_roles[t] = (t in required, t in by["must_not"], weight)
+                idf = _idf(self.n_docs, meta[t]["df"]) if weight else 0.0
+                present.append((qid, t, idf, avg))
+            roles[qid] = (term_roles, 0)
+        return meta, present, roles
+
     def _bool_match_set(
         self,
         queries: list[tuple[int, dict]],
@@ -1869,62 +2073,15 @@ class QueryEngine:
         match_all: list[int] = []            # structured-only (no text clauses)
         has_mnot: set[int] = set()
         for qid, clauses in queries:
-            bad = set(clauses) - set(self._BOOL_ROLES)
-            if bad:
-                raise ValueError(
-                    f"unknown bool clause(s) {sorted(bad)}; "
-                    f"expected {self._BOOL_ROLES}"
-                )
-            fval = clauses.get("filter")
-            if isinstance(fval, (list, tuple)):
-                ftext_parts, sclauses = [], []
-                for cl in fval:
-                    if not (isinstance(cl, dict) and len(cl) == 1):
-                        raise ValueError(
-                            f"query {qid}: each filter clause must be a "
-                            f"single-key dict, got {cl!r}"
-                        )
-                    if "match" in cl:
-                        ftext_parts.append(cl["match"])
-                    else:
-                        self._structured_pred(cl)  # validate kind/bounds
-                        sclauses.append(cl)
-                ftext = " ".join(ftext_parts)
-                if sclauses:
-                    struct[qid] = sclauses
-            else:
-                ftext = fval or ""
-            toks = {
-                r: sorted(set(self._tokenize(clauses.get(r, "") or "")))
-                for r in ("must", "should", "must_not")
-            }
-            toks["filter"] = sorted(set(self._tokenize(ftext)))
-            # a token may appear in several POSITIVE roles at once
-            # (ES: must+should double-scores it, must+filter scores it
-            # once and requires it twice over — both reproduced by the
-            # per-role fan-out in _bool_agg); only must_not beside a
-            # positive role is contradictory and rejected
-            contradictory = set(toks["must_not"]) & (
-                set(toks["must"]) | set(toks["should"]) | set(toks["filter"])
-            )
-            if contradictory:
-                raise ValueError(
-                    f"query {qid}: token(s) {sorted(contradictory)} appear in "
-                    "must_not AND a positive clause — a doc can't both "
-                    "require and exclude the same term"
-                )
+            toks, sclauses = self._flat_bool_tokens(qid, clauses)
+            if sclauses:
+                struct[qid] = sclauses
             for r in self._BOOL_ROLES:
                 for t in toks[r]:
                     rows.append((qid, self._term_of(t, fld), r))
             if toks["must_not"]:
                 has_mnot.add(qid)
             has_text = bool(toks["must"] or toks["should"] or toks["filter"])
-            if toks["must_not"] and not has_text and qid not in struct:
-                raise ValueError(
-                    f"query {qid}: must_not-only bool is ES match_all minus "
-                    "exclusions — an unbounded corpus scan; add a must/"
-                    "should/filter clause to bound the match set"
-                )
             if not has_text and qid in struct:
                 match_all.append(qid)   # ES match_all + filter, score 0
             msm = 0 if (toks["must"] or toks["filter"]) else (
@@ -2689,9 +2846,8 @@ class QueryEngine:
         (must_not-only, msm=0 should-only) is rejected as an unbounded
         corpus scan.
 
-        Scores: clause sums use engine-ordered float addition (the
-        topk_distributed caveat) — ranks agree with a flat re-sum
-        except on knife-edge float ties."""
+        Scores: clause sums use engine-ordered float addition — ranks
+        agree with a flat re-sum except on knife-edge float ties."""
         fld_default = field if field is not None else None
         leaves: list[_BoolLeaf] = []
         structs_all: list[_BoolStruct] = []
@@ -2714,6 +2870,8 @@ class QueryEngine:
         # ---- text side: one scan, one per-clause conditional agg ----
         term_leaves = [lf for lf in leaves if isinstance(lf, _BoolLeaf)]
         phrase_leaves = [lf for lf in leaves if isinstance(lf, _BoolPhrase)]
+        if phrase_leaves:
+            self._require_positions("match_phrase in a bool tree")
         qid_of = {
             lf.cid: qid for qid, lls in q_leaves.items() for lf in lls
         }
@@ -2927,6 +3085,7 @@ class QueryEngine:
         cursor depth); ranks restart at 1 per page."""
         from pyspark.sql import Window as W
 
+        self._require_positions("phrase_topk")
         fld = self._resolve_field(field)
         seqs = {
             qid: [self._term_of(t, fld) for t in self._tokenize(text)]
@@ -2969,6 +3128,7 @@ class QueryEngine:
         phrase_topk shape exactly."""
         from pyspark.sql import Window as W
 
+        self._require_positions("span and intervals queries")
         matched = self._matched_segments(scan_queries, field=field)
         if matched is None:
             return local_rows_df(self.spark, [], schema=TOPK_SCHEMA)
@@ -4031,6 +4191,7 @@ class QueryEngine:
         range-pruned segments, global WindowGroupLimit merge."""
         from pyspark.sql import Window as W
 
+        self._require_positions("phrase_prefix_topk")
         fld = self._resolve_field(field)
         seqs = {
             qid: [self._term_of(t, fld) for t in self._tokenize(text)]
@@ -5262,8 +5423,9 @@ class QueryEngine:
         ascending) pairs — ES multi-field sort, applied in order.
         BM25 score still rides along (ES track_scores).
 
-        Scale shape = :meth:`topk_distributed` plus one shuffle-join
-        against the column-pruned doc-values projection: matches come
+        Scale shape = a partial-agg sum over the decoded postings plus
+        one shuffle-join against the column-pruned doc-values
+        projection: matches come
         off the same term+group-pruned decode, dedupe in one
         (query_id, doc_id) partial agg, join doc values on doc_id,
         rank with one WindowGroupLimit on (values, doc_id). Returns
@@ -6009,7 +6171,7 @@ class QueryEngine:
         search_after: dict[int, tuple[float, int]],
     ) -> DataFrame:
         """Shared ES search_after machinery for every engine-ordered
-        scoring path (:meth:`topk_distributed`, :meth:`bool_topk`,
+        scoring path (:meth:`bool_topk`'s hash-aggregate path,
         :meth:`multi_match`): the cursor is RANK-ANCHORED on doc_id —
         the cursor doc's position in THIS job's own (score desc,
         doc_id asc) ranking defines "after", so the fed-back float
@@ -6061,64 +6223,25 @@ class QueryEngine:
         from_: int = 0,
         search_after: dict[int, tuple[float, int]] | None = None,
     ) -> DataFrame:
-        """Scale path: JVM partial-agg sum of contributions +
-        TakeOrderedAndProject per query (window row_number). Summation
-        order is engine-chosen (float64 last-ulp may differ from the
-        pinned order); ranks agree except on exact-tie knife edges,
-        which the deterministic path resolves — use this for
-        throughput, topk() for rank-audits.
+        """Batch top-k with ES ``minimum_should_match``, answered by
+        :meth:`topk_wand` (coordinator or Spark side by posting
+        volume).
 
-        ``min_match``: ES minimum_should_match — a doc must contain at
-        least this many of the query's distinct tokens; ``"all"`` is
-        the ES ``operator: and`` semantics (a query token absent from
-        the whole corpus then matches nothing, as in ES).
+        ``min_match``: a doc must contain at least this many of the
+        query's distinct tokens; ``"all"`` is the ES ``operator: and``
+        semantics (a query token absent from the whole corpus then
+        matches nothing, as in ES). ``from_``: ES pagination (rows
+        from_+1 .. from_+k, global ranks).
 
-        ``from_``: ES pagination (rows from_+1 .. from_+k, global
-        ranks). ``search_after``: ES cursor pagination — per query_id
-        the (score, doc_id) of the LAST hit already seen (as returned
-        by this method); only strictly-after hits in the (score desc,
-        doc_id asc) order are served. The cursor is RANK-ANCHORED on
-        doc_id: the cursor doc's position in THIS job's own ranking
-        defines "after", so the fed-back float score never has to be
-        bit-equal to a re-summed one (this path's F.sum accumulation
-        order is engine-chosen — a last-ulp drift across jobs would
-        otherwise skip or duplicate the boundary doc). The fed score
-        is used only as a fallback ordering key when the cursor doc
-        has vanished from the match set (deleted/updated between
-        pages)."""
-        from pyspark.sql import Window as W
-
-        matched = self._matched_segments(queries, field=field, fields=fields)
-        if matched is None:
-            return local_rows_df(self.spark, [], schema=TOPK_SCHEMA)
-        contribs = matched.mapInPandas(
-            _score_segments(self.cfg.k1, self.cfg.b, self._dead_by_ord),
-            schema=CONTRIB_SCHEMA,
-        )
-        # n_matched exists only for the min_match filter — the common
-        # path skips the distinct-aggregate layer entirely
-        aggs = [F.sum("contrib").alias("score")]
-        if min_match is not None:
-            aggs.append(F.count_distinct("term").alias("n_matched"))
-        scored = contribs.groupBy("query_id", "doc_id").agg(*aggs)
-        if min_match is not None:
-            need = {
-                qid: _min_match_count(min_match, len(set(self._tokenize(text))))
-                for qid, text in queries
-            }
-            need_df = local_rows_df(self.spark, 
-                list(need.items()), schema="query_id long, need int"
-            )
-            scored = scored.join(F.broadcast(need_df), "query_id").filter(
-                F.col("n_matched") >= F.col("need")
-            )
-        w = W.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-        if search_after:
-            scored = self._rank_anchored_after(scored, w, search_after)
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter((F.col("rank") > from_) & (F.col("rank") <= from_ + k))
-            .select("query_id", "rank", "doc_id", "score")
+        ``search_after``: ES cursor pagination — per query_id the
+        (score, doc_id) of the LAST hit already seen. Scores are the
+        pinned term-lexicographic sum, bit-stable across calls, so the
+        cursor is an EXACT sort key: only hits strictly after it in
+        (score desc, doc_id asc) order are served, ranks restart at 1,
+        and a cursor doc deleted between pages still pages correctly."""
+        return self.topk_wand(
+            queries, k=k, field=field, fields=fields, from_=from_,
+            search_after=search_after, min_match=min_match,
         )
 
 

@@ -22,6 +22,16 @@ segments covering disjoint ascending doc_id ranges; a cursor simply
 chains their blocks (delta chains restart per segment, so block
 bases come from the previous block's last doc within the same
 segment only).
+
+Cursor roles (Lucene's WANDScorer with ``minShouldMatch`` plus a
+required-clause conjunction): a REQUIRED cursor (ES must/filter,
+``operator: and``) must hold every hit, so candidates come from a
+leapfrog over the required cursors and the block-max test sums their
+current blocks' bounds; an EXCLUDED cursor (must_not) drops a
+candidate before it is scored; OPTIONAL cursors add their score and
+count towards ``min_match`` (ES minimum_should_match), and with no
+required cursor the WAND pivot is never placed before the
+``min_match``-th cursor.
 """
 
 from __future__ import annotations
@@ -39,9 +49,12 @@ _DONE = np.iinfo(np.int64).max
 class TermCursor:
     """Doc-at-a-time cursor over one term's salt-ordered segments."""
 
-    def __init__(self, term: str, idf: float, segments: list[dict], k1: float, b: float, avgdl: float, block_size: int = 128):
+    def __init__(self, term: str, idf: float, segments: list[dict], k1: float, b: float, avgdl: float, block_size: int = 128, weight: int = 1):
         self.term = term
         self.idf = float(idf)
+        # how many times a hit adds this term's contribution (0 for a
+        # filter/must_not cursor, 2 for a must+should token)
+        self.weight = weight
         self.k1, self.b, self.avgdl = k1, b, avgdl
         self.block_size = block_size
         segments = sorted(segments, key=lambda s: s["salt"])
@@ -68,7 +81,7 @@ class TermCursor:
         self.blk_base = np.concatenate(bases)
         bt = np.concatenate(maxtf)
         bd = np.concatenate(mindl)
-        self.blk_ub = self._contrib(bt, bd)
+        self.blk_ub = self._contrib(bt, bd) * weight
         self.max_ub = float(self.blk_ub.max())
         self.n_blocks = len(self.blk_last)
         self.cur_block = -1
@@ -155,10 +168,20 @@ def wand_topk(
     doc_hi: int | None = None,
     dead: np.ndarray | None = None,
     after: tuple[float, int] | None = None,
+    min_match: int = 0,
 ) -> list[tuple[int, float]]:
     """term_entries: [{term, idf, segments: [segment rows]}]. Returns
     [(doc_id, score)] ranked by (score desc, doc_id asc); scores are
     summed term-lexicographically (the pinned order).
+
+    Roles ride on the entries (one entry per term): ``required``
+    (every hit holds the term), ``excluded`` (no hit holds it) and
+    ``weight`` (times its contribution is added; default 1, 0 for a
+    non-scoring role). Entries that are neither required nor excluded
+    are optional: a hit holds at least ``min_match`` of them, and at
+    least one when no entry is required. A required entry without
+    segments, or fewer optional entries with segments than
+    ``min_match``, matches nothing. Plain entries give the OR match.
 
     ``doc_lo``/``doc_hi`` (half-open) restrict evaluation to a doc_id
     RANGE: the distributed path runs one local WAND per (query, range)
@@ -177,88 +200,149 @@ def wand_topk(
     keep a k-sized heap (never from_+k) and the heap threshold still
     rises normally, so cursor paging gets FASTER with depth, not
     slower."""
-    cursors = [
-        TermCursor(
+    entries = sorted(term_entries, key=lambda e: e["term"])
+    if any(e.get("required") and not e["segments"] for e in entries):
+        return []
+    # term-sorted, so every score sum below runs in the pinned order
+    cursors = []
+    req: list[TermCursor] = []
+    excl: list[TermCursor] = []
+    opt: list[TermCursor] = []
+    for e in entries:
+        if not e["segments"]:
+            continue
+        c = TermCursor(
             e["term"], e["idf"], e["segments"], k1, b,
             # per-entry avgdl (a fielded term scores with its FIELD's
             # length stats); the argument is the single-field fallback
             e.get("avgdl", avgdl), block_size,
+            weight=0 if e.get("excluded") else int(e.get("weight", 1)),
         )
-        for e in sorted(term_entries, key=lambda e: e["term"])
-        if e["segments"]
-    ]
+        cursors.append(c)
+        if e.get("required"):
+            req.append(c)
+        elif e.get("excluded"):
+            excl.append(c)
+        else:
+            opt.append(c)
+    need = min_match if req else max(min_match, 1)
+    if k <= 0 or len(opt) < need:
+        return []
+    scoring = [c for c in cursors if c.weight]
     if doc_lo is not None:
         for c in cursors:
             c.advance_to(doc_lo)
     hi = doc_hi if doc_hi is not None else _DONE
-    if not cursors:
-        return []
     heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap, size ≤ k
 
     def threshold() -> float:
         return heap[0][0] if len(heap) == k else -np.inf
 
-    while True:
-        live = [c for c in cursors if c.cur_doc != _DONE and c.cur_doc < hi]
-        if not live:
-            break
-        live.sort(key=lambda c: c.cur_doc)
-        # pivot: first index where cumulative max-ub can beat threshold
-        acc, pivot = 0.0, -1
-        for i, c in enumerate(live):
-            acc += c.max_ub
-            if acc > threshold() - _EPS:
-                pivot = i
+    def consider(doc: int) -> None:
+        """Score ``doc`` and offer it to the heap unless it is dead,
+        excluded or short of ``min_match`` optional cursors."""
+        if dead is not None and dead.size:
+            j = int(np.searchsorted(dead, doc))
+            if j < dead.size and dead[j] == doc:
+                return  # superseded version: skip without scoring
+        for c in excl:
+            c.advance_to(doc)
+            if c.cur_doc == doc:
+                return
+        if req:
+            n_opt = 0
+            for c in opt:
+                c.advance_to(doc)
+                n_opt += c.cur_doc == doc
+            if n_opt < need:
+                return
+        score = 0.0
+        for c in scoring:
+            if c.cur_doc == doc:
+                s = c.score_current()
+                score += s
+                if c.weight > 1:  # e.g. a must+should token adds twice
+                    for _ in range(c.weight - 1):
+                        score += s
+        served = after is not None and (
+            score > after[0] or (score == after[0] and doc <= after[1])
+        )
+        if served:
+            return
+        item = (score, -doc)
+        if len(heap) < k:
+            heapq.heappush(heap, item)
+        elif item > heap[0]:
+            heapq.heapreplace(heap, item)
+
+    if req:
+        # leapfrog over the required cursors: a candidate is a doc all
+        # of them sit on; optional cursors only add to its score, so
+        # they are bounded by their global maxima
+        opt_ub = sum(c.max_ub for c in opt)
+        total_ub = sum(c.max_ub for c in req) + opt_ub
+        while True:
+            doc = max(c.cur_doc for c in req)
+            if doc >= hi:
                 break
-        if pivot < 0:
-            break
-        pivot_doc = live[pivot].cur_doc
-        # extend the pivot over lists parked at the same doc — they
-        # contribute to both the block-max bound and the score
-        while pivot + 1 < len(live) and live[pivot + 1].cur_doc == pivot_doc:
-            pivot += 1
-        if live[0].cur_doc == pivot_doc:
-            # block-max check across the lists at/ahead of the pivot
-            bub = sum(c.block_ub() for c in live[: pivot + 1])
-            if bub <= threshold() - _EPS:
-                # skip past the nearest block boundary, capped at the
-                # next list's current doc (pivot set changes there)
-                target = min(c.block_last() for c in live[: pivot + 1]) + 1
-                if pivot + 1 < len(live):
-                    target = min(target, live[pivot + 1].cur_doc)
-                target = max(target, pivot_doc + 1)
-                for c in live[: pivot + 1]:
+            if len(heap) == k and (
+                total_ub <= threshold() - _EPS or total_ub == 0.0
+            ):
+                # nothing left can beat the k-th best (an all-zero
+                # bound ties at best, and ties lose on the larger doc)
+                break
+            for c in req:
+                c.advance_to(doc)
+            if any(c.cur_doc != doc for c in req):
+                continue
+            if sum(c.block_ub() for c in req) + opt_ub <= threshold() - _EPS:
+                target = min(c.block_last() for c in req) + 1
+                for c in req:
                     c.advance_to(target)
                 continue
-            if dead is not None and dead.size:
-                j = int(np.searchsorted(dead, pivot_doc))
-                if j < dead.size and dead[j] == pivot_doc:
-                    # superseded version: skip without scoring
-                    for c in live:
-                        if c.cur_doc == pivot_doc:
-                            c.next_doc()
+            consider(doc)
+            for c in req:
+                c.next_doc()
+    else:
+        while True:
+            live = [c for c in opt if c.cur_doc != _DONE and c.cur_doc < hi]
+            if len(live) < need:
+                break
+            live.sort(key=lambda c: c.cur_doc)
+            # pivot: first index where cumulative max-ub can beat the
+            # threshold, never before the need-th cursor (a doc before
+            # it sits on fewer than ``need`` lists)
+            acc, pivot = 0.0, -1
+            for i, c in enumerate(live):
+                acc += c.max_ub
+                if i + 1 >= need and acc > threshold() - _EPS:
+                    pivot = i
+                    break
+            if pivot < 0:
+                break
+            pivot_doc = live[pivot].cur_doc
+            # extend the pivot over lists parked at the same doc — they
+            # contribute to both the block-max bound and the score
+            while pivot + 1 < len(live) and live[pivot + 1].cur_doc == pivot_doc:
+                pivot += 1
+            if live[0].cur_doc == pivot_doc:
+                # block-max check across the lists at/ahead of the pivot
+                bub = sum(c.block_ub() for c in live[: pivot + 1])
+                if bub <= threshold() - _EPS:
+                    # skip past the nearest block boundary, capped at the
+                    # next list's current doc (pivot set changes there)
+                    target = min(c.block_last() for c in live[: pivot + 1]) + 1
+                    if pivot + 1 < len(live):
+                        target = min(target, live[pivot + 1].cur_doc)
+                    target = max(target, pivot_doc + 1)
+                    for c in live[: pivot + 1]:
+                        c.advance_to(target)
                     continue
-            # score pivot_doc: cursors list is term-sorted, so this sum
-            # runs in term-lex order — the pinned summation order
-            score = 0.0
-            for c in cursors:
-                if c.cur_doc == pivot_doc:
-                    score += c.score_current()
-            item = (score, -pivot_doc)
-            served = after is not None and (
-                score > after[0]
-                or (score == after[0] and pivot_doc <= after[1])
-            )
-            if not served:
-                if len(heap) < k:
-                    heapq.heappush(heap, item)
-                elif item > heap[0]:
-                    heapq.heapreplace(heap, item)
-            for c in live:
-                if c.cur_doc == pivot_doc:
+                consider(pivot_doc)
+                for c in live[: pivot + 1]:
                     c.next_doc()
-        else:
-            for c in live[:pivot]:
-                c.advance_to(pivot_doc)
+            else:
+                for c in live[:pivot]:
+                    c.advance_to(pivot_doc)
     out = sorted(heap, key=lambda t: (-t[0], -t[1]))
     return [(-d, s) for s, d in out]

@@ -89,14 +89,25 @@ def local_rows_df(spark: SparkSession, rows, schema):
         if isinstance(schema, StructType)
         else _parse_datatype_string(schema)
     )
+    if not rows:
+        # pyspark turns an empty pandas frame into an RDD scan, and
+        # collecting that runs a Spark job; an empty JVM LocalRelation
+        # collects on the driver
+        from pyspark.sql import DataFrame
+
+        jss = spark._jsparkSession
+        return DataFrame(
+            jss.createDataFrame(
+                spark._jvm.java.util.ArrayList(), jss.parseDataType(st.json())
+            ),
+            spark,
+        )
     try:
         pdf = pd.DataFrame(
             [tuple(r) for r in rows], columns=st.names, dtype=object
         )
         return spark.createDataFrame(pdf, schema=st)
     except Exception:
-        if not rows:
-            return spark.createDataFrame([], schema=st)
         return spark.createDataFrame(
             spark.sparkContext.parallelize(rows, 1), schema=st
         )
@@ -150,11 +161,12 @@ def _warm_start(spark: SparkSession) -> None:
         ).build(docs, idx)
         eng = QueryEngine(spark, idx)
         # a 2-doc batch would run on the coordinator; prime the Spark
-        # WAND plan that batches above the coordinator bound run
+        # WAND plan that batches above the coordinator bound run, and
+        # the hash-aggregate plan of bool specs WAND does not answer
         eng._COORDINATOR_MAX_POSTINGS = 0
         eng.topk_wand([(1, "a b")], k=2, n_ranges=2).collect()
-        eng.topk_distributed([(1, "a")], k=2).collect()
-        eng.bool_topk([(1, {"must": "a", "must_not": "d"})], k=2).collect()
+        eng.bool_topk([(1, {"must": [{"match": "a"}],
+                             "must_not": [{"match": "d"}]})], k=2).collect()
         eng.phrase_topk([(1, "a b")], k=2).collect()
         # the fielded + positional build compiles its own codegen
         # shapes (per-field tf tables, union, per-field stats)
