@@ -277,3 +277,114 @@ def test_wand_required_term_without_segments_matches_nothing():
     # two optional terms needed, one has no postings
     assert wand_topk([x, {"term": "y", "idf": 0.0, "segments": []}], 10,
                      1.2, 0.75, 100.0, 16, min_match=2) == []
+
+
+def _brute_force(entries, avgdl, k):
+    """Exhaustive OR top-k, summed term-lexicographically from 0.0."""
+    from xml_to_es_spark.operators.postings import decode_segment
+
+    cfg = BM25Config()
+    truth: dict[int, float] = {}
+    for e in sorted(entries, key=lambda e: e["term"]):
+        for seg in e["segments"]:
+            d, tf, dl = decode_segment(seg)
+            contrib = e["idf"] * saturation(tf, dl, avgdl, cfg)
+            for doc, c in zip(d.tolist(), contrib.tolist()):
+                truth[doc] = truth.get(doc, 0.0) + c
+    return sorted(truth.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
+
+
+@pytest.mark.parametrize("rare_at", ["start", "end"])
+def test_block_max_pruning_skips_blocks(monkeypatch, rare_at):
+    """A long low-idf term spread over many blocks and a rare high-idf
+    term in a few docs: the top-k sits in the rare term's windows, so
+    the kernel leaves most of the long term's blocks undecoded, and the
+    answer is still exactly the brute-force one. With the rare docs at
+    the end of the doc range, this needs the rare block's bound to start
+    at its first doc rather than at the start of the doc range."""
+    import xml_to_es_spark.operators.wand as wand
+
+    rng = np.random.RandomState(11)
+    n_docs, bs = 40_000, 32
+    dls = rng.randint(20, 400, size=n_docs).astype(np.int64)
+    avgdl = float(dls.mean())
+    common = np.arange(0, n_docs, 2, dtype=np.int64)  # 625 blocks
+    lo = 0 if rare_at == "start" else n_docs - 2000
+    rare = np.sort(lo + rng.choice(2000, size=12, replace=False)).astype(np.int64)
+    entries = []
+    for term, docs, tf_hi in (("common", common, 4), ("rare", rare, 6)):
+        seg = encode_segment(docs, rng.randint(1, tf_hi, size=docs.size), dls[docs], bs)
+        seg["salt"] = 0
+        entries.append({"term": term, "idf": ref_idf(n_docs, docs.size), "segments": [seg]})
+    n_blocks = sum(len(s["block_last_doc"]) for e in entries for s in e["segments"])
+    decoded = []
+    orig = wand._decode_blocks
+
+    def counting(terms, picks, *a):
+        decoded.append(sum(p.size for p in picks))
+        return orig(terms, picks, *a)
+
+    monkeypatch.setattr(wand, "_decode_blocks", counting)
+    cfg = BM25Config()
+    for k in (1, 5, 10):
+        decoded.clear()
+        got = wand.wand_topk(entries, k, cfg.k1, cfg.b, avgdl, bs)
+        assert got == _brute_force(entries, avgdl, k)
+        assert 0 < sum(decoded) < n_blocks / 4, (k, decoded, n_blocks)
+
+
+@settings(max_examples=25, deadline=None)
+@given(
+    seed=st.integers(min_value=0, max_value=10_000),
+    k=st.integers(min_value=1, max_value=15),
+    min_match=st.integers(min_value=0, max_value=3),
+    use_after=st.booleans(),
+)
+def test_block_columns_as_lists_or_arrays(seed, k, min_match, use_after):
+    """The kernel returns identical rows, bit for bit, whether a
+    segment's block columns are Python lists (rows read with pyarrow's
+    ``to_pylist``) or numpy arrays (rows of a Spark pandas group)."""
+    rng = np.random.RandomState(seed)
+    entries, _, avgdl = _make_corpus(rng, n_docs=300, n_terms=6, salted=seed % 2 == 0)
+    cfg = BM25Config()
+    q = []
+    for i in rng.choice(len(entries), rng.randint(1, 5), replace=False):
+        e = dict(entries[i])
+        kind = rng.randint(4)
+        e.update(required=kind == 1, excluded=kind == 2, weight={2: 0, 3: 2}.get(kind, 1))
+        q.append(e)
+    as_arrays = [
+        {**e, "segments": [
+            {c: np.asarray(v) if isinstance(v, list) else v for c, v in s.items()}
+            for s in e["segments"]
+        ]}
+        for e in q
+    ]
+    full = wand_topk(q, 40, cfg.k1, cfg.b, avgdl, 32, min_match=min_match)
+    after = None
+    if use_after and len(full) > 2:
+        after = (full[len(full) // 2][1], full[len(full) // 2][0])
+    lists = wand_topk(q, k, cfg.k1, cfg.b, avgdl, 32, after=after, min_match=min_match)
+    arrays = wand_topk(as_arrays, k, cfg.k1, cfg.b, avgdl, 32, after=after, min_match=min_match)
+    assert lists == arrays
+    assert all(type(d) is int and type(s) is float for d, s in arrays)
+
+
+def test_properties_hold_through_rounds(monkeypatch):
+    """The properties above, with the kernel's round size forced down
+    so that the rounds plan about 2k postings each: at the default size
+    these small corpora mostly fit one exhaustive round, so this is
+    what puts the windows, θ pruning and the per-round candidate masks
+    under every property (roles, min_match, salts, ranges, tombstones,
+    search_after, list or array columns)."""
+    import xml_to_es_spark.operators.wand as wand
+
+    monkeypatch.setattr(wand, "_ROUND_POSTINGS", 1)
+    for seed in range(4):
+        for salted in (False, True):
+            test_wand_matches_bruteforce(seed, salted)
+    for seed in (0, 4):
+        test_wand_range_partition_merges_to_global(seed)
+    test_wand_property_ranges_and_tombstones()
+    test_wand_roles_property()
+    test_block_columns_as_lists_or_arrays()

@@ -56,20 +56,23 @@ def varbyte_encode(values: np.ndarray) -> bytes:
 
 def varbyte_decode(data: bytes, n: int | None = None) -> np.ndarray:
     """Decode a varbyte stream to uint64. ``n`` (expected count) is a
-    consistency check when provided."""
+    consistency check when provided. A stream of one-byte values is a
+    plain widening; otherwise each byte's 7 bits are shifted by its
+    place in its value and OR-reduced per value (no per-length loop)."""
     b = np.frombuffer(data, dtype=np.uint8)
-    if b.size == 0:
-        return np.zeros(0, dtype=np.uint64)
-    is_end = (b & 0x80) == 0
-    ends = np.flatnonzero(is_end)
-    starts = np.empty_like(ends)
-    starts[0] = 0
-    starts[1:] = ends[:-1] + 1
-    lengths = ends - starts + 1
-    vals = np.zeros(ends.shape, dtype=np.uint64)
-    for j in range(int(lengths.max())):
-        mask = lengths > j
-        vals[mask] |= (b[starts[mask] + j].astype(np.uint64) & np.uint64(0x7F)) << np.uint64(7 * j)
+    ends = np.flatnonzero(b < 0x80)
+    if ends.size == b.size:  # every value fits in one byte (or no bytes)
+        vals = b.astype(np.uint64)
+    elif not ends.size:
+        vals = np.zeros(0, dtype=np.uint64)
+    else:
+        b = b[: ends[-1] + 1]  # bytes after the last value's end are ignored
+        starts = np.empty_like(ends)
+        starts[0] = 0
+        starts[1:] = ends[:-1] + 1
+        place = np.arange(b.size) - np.repeat(starts, ends - starts + 1)
+        groups = (b & 0x7F).astype(np.uint64) << (7 * place).astype(np.uint64)
+        vals = np.bitwise_or.reduceat(groups, starts)
     if n is not None and vals.size != n:
         raise ValueError(f"varbyte stream holds {vals.size} values, expected {n}")
     return vals
@@ -170,16 +173,6 @@ def encode_segment(
         "tfs_bin": tfs_bin,
         "dls_bin": dls_bin,
     }
-
-
-def decode_block(
-    data: bytes, offsets: list[int], b: int, n_total: int, block_size: int
-) -> np.ndarray:
-    """Decode one block's values without touching other blocks."""
-    start = offsets[b]
-    end = offsets[b + 1] if b + 1 < len(offsets) else len(data)
-    n = min(block_size, n_total - b * block_size)
-    return varbyte_decode(data[start:end], n)
 
 
 def decode_segment(row: dict) -> tuple[np.ndarray, np.ndarray, np.ndarray]:

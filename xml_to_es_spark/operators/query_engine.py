@@ -112,7 +112,7 @@ def _local_dir(path: str) -> str | None:
 
 
 def _wand_group_hits(
-    rows: Iterable[dict],
+    entries: list[dict],
     k: int,
     k1: float,
     b: float,
@@ -124,38 +124,68 @@ def _wand_group_hits(
     doc_hi: int | None = None,
     roles: tuple[dict, int] | None = None,
 ) -> list[tuple[int, float]]:
-    """The WAND kernel body shared by the Spark and coordinator paths:
-    one (query, dir[, range]) group's matched segment rows (each with
-    term, idf, avgdl and the :data:`_SEG_COLS` columns) → its local
-    block-max WAND top-k [(doc_id, score)]. ``roles`` is the query's
-    entry in a :data:`Roles` map; every term it names becomes a
-    cursor, with no segments when the group holds none of its
-    postings (so a required term missing here empties the page)."""
+    """The WAND kernel call shared by the Spark and coordinator paths:
+    one (query, dir[, range]) group's matched terms, one
+    ``{term, idf, avgdl, segments}`` entry per term (segments are rows
+    holding the :data:`_SEG_COLS` columns) → its local top-k
+    [(doc_id, score)]. ``roles`` is the query's entry in a
+    :data:`Roles` map; every term it names becomes an entry, with no
+    segments when the group holds none of its postings (so a required
+    term missing here empties the page)."""
     from xml_to_es_spark.operators.wand import wand_topk
 
-    entries: dict[str, dict] = {}
-    for r in rows:
-        e = entries.setdefault(
-            r["term"],
-            {
-                "term": r["term"],
-                "idf": float(r["idf"]),
-                "avgdl": float(r["avgdl"]),
-                "segments": [],
-            },
-        )
-        e["segments"].append({c: r[c] for c in _SEG_COLS})
     min_match = 0
     if roles is not None:
         term_roles, min_match = roles
-        for t, (required, excluded, weight) in term_roles.items():
-            e = entries.setdefault(t, {"term": t, "idf": 0.0, "segments": []})
-            e.update(required=required, excluded=excluded, weight=weight)
+        by_term = {e["term"]: e for e in entries}
+        entries = [
+            {**by_term.get(t, {"term": t, "idf": 0.0, "segments": []}),
+             "required": required, "excluded": excluded, "weight": weight}
+            for t, (required, excluded, weight) in term_roles.items()
+        ] + [e for t, e in by_term.items() if t not in term_roles]
     return wand_topk(
-        list(entries.values()), k, k1, b, avgdl, block_size,
+        entries, k, k1, b, avgdl, block_size,
         doc_lo=doc_lo, doc_hi=doc_hi, dead=dead, after=after,
         min_match=min_match,
     )
+
+
+def _entries_of_rows(rows: Iterable[dict]) -> list[dict]:
+    """Kernel entries from matched segment rows that each carry their
+    term, idf and avgdl (the Spark side's group rows)."""
+    entries: dict[str, dict] = {}
+    for r in rows:
+        e = entries.get(r["term"])
+        if e is None:
+            e = entries[r["term"]] = {
+                "term": r["term"], "idf": float(r["idf"]),
+                "avgdl": float(r["avgdl"]), "segments": [],
+            }
+        e["segments"].append(r)
+    return list(entries.values())
+
+
+def _segments_by_term(tbl) -> dict[str, list[dict]]:
+    """term → its segment rows in a pyarrow table of :data:`_SEG_COLS`,
+    built once per table: block columns become numpy views into the
+    table's buffers, binary columns bytes."""
+    import pyarrow as pa
+
+    cols = {}
+    for c in _SEG_COLS:
+        col = tbl.column(c)
+        if pa.types.is_list(col.type):
+            arr = col.combine_chunks()
+            vals = arr.values.to_numpy()
+            off = arr.offsets.to_numpy().tolist()
+            cols[c] = [vals[lo:hi] for lo, hi in zip(off, off[1:])]
+        else:
+            cols[c] = col.to_pylist()
+    out: dict[str, list[dict]] = {}
+    names = list(cols)
+    for t, vals in zip(tbl.column("term").to_pylist(), zip(*cols.values())):
+        out.setdefault(t, []).append(dict(zip(names, vals)))
+    return out
 
 
 def _merge_pages(
@@ -656,7 +686,8 @@ class QueryEngine:
         by group; parquet min/max stats prune row groups exactly like
         the pushed filter in the Spark scan). Returns None to route to
         the distributed scan (dictionary too large, non-local paths,
-        or any read problem)."""
+        or a failed read: an ``OSError`` or pyarrow error, logged at
+        DEBUG; any other error reaches the caller)."""
         if self._dict_local_ok is None:
             import os as _os
 
@@ -676,9 +707,10 @@ class QueryEngine:
             self._dict_local_ok = ok and total <= self._LOCAL_DICT_MAX_BYTES
         if not self._dict_local_ok:
             return None
-        try:
-            import pyarrow.dataset as pads
+        import pyarrow as pa
+        import pyarrow.dataset as pads
 
+        try:
             rows: list[tuple] = []
             for o, p in self.dirs:
                 dset = self._dict_ds.get(o)
@@ -699,7 +731,7 @@ class QueryEngine:
                     for tm, dv, g in zip(terms_a, dfs_a, grp_a)
                 ]
             return rows
-        except Exception:
+        except (OSError, pa.ArrowException):
             logger.debug(
                 "local terms-dictionary read failed; the distributed "
                 "scan serves this engine from now on", exc_info=True,
@@ -902,9 +934,9 @@ class QueryEngine:
         (score, doc_id) of the last hit served. WAND scores are the
         pinned deterministic sum (bit-stable across jobs), so the
         cursor filters by exact sort-key comparison INSIDE the
-        kernels: served docs never enter the heap, the heap stays
-        k-sized at any depth, and block-max pruning still applies —
-        deep cursor pages are never slower than page one (unlike
+        kernels: served docs are masked out of the candidates, the
+        kernel keeps k hits at any depth, and block-max pruning still
+        applies against the k-th best unserved score (unlike
         ``from_``, which ranks from_+k rows). Ranks restart at 1 per
         page.
 
@@ -1044,7 +1076,7 @@ class QueryEngine:
         def run(pdf: pd.DataFrame) -> pd.DataFrame:
             qid = int(pdf["query_id"].iat[0])
             hits = _wand_group_hits(
-                pdf.to_dict("records"), k, k1, b, avgdl,
+                _entries_of_rows(pdf.to_dict("records")), k, k1, b, avgdl,
                 int(pdf["bsz"].iat[0]),
                 dead=dead_by_ord.get(int(pdf["ord"].iat[0])),
                 after=None if after is None else after.get(qid),
@@ -1133,20 +1165,18 @@ class QueryEngine:
         k1, b = self.cfg.k1, self.cfg.b
         byq: dict[int, list[tuple[float, int]]] = {}
         for o, tbl in segs_by_ord.items():
-            segs: dict[str, list[dict]] = {}
-            for r in tbl.to_pylist():
-                segs.setdefault(r["term"], []).append(r)
-            rows_of: dict[int, list[dict]] = {}
+            segs = _segments_by_term(tbl)
+            entries_of: dict[int, list[dict]] = {}
             for qid, t, idf_v, avg in present:
-                for seg in segs.get(t, ()):
-                    rows_of.setdefault(qid, []).append(
-                        {**seg, "idf": idf_v, "avgdl": avg}
+                if t in segs:
+                    entries_of.setdefault(qid, []).append(
+                        {"term": t, "idf": idf_v, "avgdl": avg, "segments": segs[t]}
                     )
             bs = int(self._dir_stats[o].get("block_size") or 128)
             dead = self._dead_by_ord.get(o)
-            for qid, rows in rows_of.items():
+            for qid, entries in entries_of.items():
                 hits = _wand_group_hits(
-                    rows, k_local, k1, b, self.avgdl, bs, dead=dead,
+                    entries, k_local, k1, b, self.avgdl, bs, dead=dead,
                     after=None if after is None else after.get(qid),
                     roles=None if roles is None else roles.get(qid),
                 )
@@ -3312,8 +3342,7 @@ class QueryEngine:
         (term-lex order, bit-stable across jobs; a dis_max of pinned
         sums is equally deterministic), so served docs are excluded
         INSIDE the kernel by exact (score, doc_id) sort-key comparison
-        — the WAND-path cursor design: heaps stay k-sized at any
-        depth."""
+        — the WAND-path cursor design: k hits kept at any depth."""
         k1, b = self.cfg.k1, self.cfg.b
         dead_by_ord = self._dead_by_ord
 

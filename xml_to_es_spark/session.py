@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import functools
 import logging
 import os
 
@@ -65,6 +66,15 @@ def get_spark(
     return spark
 
 
+@functools.lru_cache(maxsize=64)
+def _parsed_schema(ddl: str):
+    """A DDL schema string parsed to a ``StructType`` once per string:
+    each parse is a py4j round trip to the JVM's DDL parser."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    return _parse_datatype_string(ddl)
+
+
 def local_rows_df(spark: SparkSession, rows, schema):
     """``spark.createDataFrame(rows, schema)`` for SMALL driver-side
     row lists, materialized as a JVM ``LocalRelation`` via Arrow.
@@ -78,17 +88,16 @@ def local_rows_df(spark: SparkSession, rows, schema):
     path hands the rows to the JVM once, at creation: evaluation then
     never touches a Python worker (guide §4: control how often the
     JVM↔Python boundary is crossed, not just how much crosses it).
-    Falls back to a one-slice RDD for values Arrow cannot convert."""
+    A DDL ``schema`` string is parsed once per string. Falls back to a
+    one-slice RDD for values Arrow cannot convert (pyarrow's errors,
+    or the ``TypeError``/``ValueError`` pyspark wraps them in), logged
+    at DEBUG."""
     import pandas as pd
+    import pyarrow as pa
     from pyspark.sql.types import StructType
-    from pyspark.sql.types import _parse_datatype_string  # noqa: F401
 
     rows = rows if isinstance(rows, list) else list(rows)
-    st = (
-        schema
-        if isinstance(schema, StructType)
-        else _parse_datatype_string(schema)
-    )
+    st = schema if isinstance(schema, StructType) else _parsed_schema(schema)
     if not rows:
         # pyspark turns an empty pandas frame into an RDD scan, and
         # collecting that runs a Spark job; an empty JVM LocalRelation
@@ -107,7 +116,11 @@ def local_rows_df(spark: SparkSession, rows, schema):
             [tuple(r) for r in rows], columns=st.names, dtype=object
         )
         return spark.createDataFrame(pdf, schema=st)
-    except Exception:
+    except (pa.ArrowException, TypeError, ValueError):
+        logger.debug(
+            "local_rows_df: Arrow conversion failed; building a one-slice "
+            "RDD instead", exc_info=True,
+        )
         return spark.createDataFrame(
             spark.sparkContext.parallelize(rows, 1), schema=st
         )
