@@ -87,17 +87,22 @@ def test_dictionary_read_error_is_not_masked(monkeypatch, spark, tmp_path):
         idx,
     )
 
+    # open both engines first: the constructor reads the stats table
+    # with pyarrow too, so a patched reader there would fail before the
+    # dictionary read is reached
+    eng = QueryEngine(spark, idx)
+    eng_unreadable = QueryEngine(spark, idx)
+
     def broken(*a, **kw):
         raise RuntimeError("reader defect")
 
     monkeypatch.setattr(pads, "dataset", broken)
     with pytest.raises(RuntimeError, match="reader defect"):
-        QueryEngine(spark, idx).term_stats(["alpha"])
+        eng.term_stats(["alpha"])
 
     def unreadable(*a, **kw):
         raise OSError("unreadable")
 
     monkeypatch.setattr(pads, "dataset", unreadable)
-    eng = QueryEngine(spark, idx)
-    assert eng.term_stats(["alpha"])["alpha"][0] == 2  # the Spark scan answers
-    assert eng._dict_local_ok is False
+    assert eng_unreadable.term_stats(["alpha"])["alpha"][0] == 2  # the Spark scan answers
+    assert eng_unreadable._dict_local_ok is False

@@ -1,4 +1,4 @@
-"""Block-max WAND kernel: rank-identical to exhaustive evaluation on
+"""WAND top-k kernel: rank-identical to exhaustive evaluation on
 randomized corpora (property-style, no Spark needed)."""
 
 import numpy as np
@@ -294,14 +294,13 @@ def _brute_force(entries, avgdl, k):
     return sorted(truth.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
 
 
-@pytest.mark.parametrize("rare_at", ["start", "end"])
-def test_block_max_pruning_skips_blocks(monkeypatch, rare_at):
-    """A long low-idf term spread over many blocks and a rare high-idf
-    term in a few docs: the top-k sits in the rare term's windows, so
-    the kernel leaves most of the long term's blocks undecoded, and the
-    answer is still exactly the brute-force one. With the rare docs at
-    the end of the doc range, this needs the rare block's bound to start
-    at its first doc rather than at the start of the doc range."""
+@pytest.mark.parametrize("salted", [False, True])
+def test_doc_range_decodes_only_its_blocks(monkeypatch, salted):
+    """A doc-range call (one task of the distributed path) decodes only
+    the blocks that can hold docs of its range: a long term over 625
+    blocks, split into four ranges that each cut through a block,
+    decodes about a quarter of the blocks per range, and the ranges
+    still merge into exactly the brute-force answer."""
     import xml_to_es_spark.operators.wand as wand
 
     rng = np.random.RandomState(11)
@@ -309,13 +308,19 @@ def test_block_max_pruning_skips_blocks(monkeypatch, rare_at):
     dls = rng.randint(20, 400, size=n_docs).astype(np.int64)
     avgdl = float(dls.mean())
     common = np.arange(0, n_docs, 2, dtype=np.int64)  # 625 blocks
-    lo = 0 if rare_at == "start" else n_docs - 2000
-    rare = np.sort(lo + rng.choice(2000, size=12, replace=False)).astype(np.int64)
+    rare = np.sort(rng.choice(n_docs, size=12, replace=False)).astype(np.int64)
     entries = []
     for term, docs, tf_hi in (("common", common, 4), ("rare", rare, 6)):
-        seg = encode_segment(docs, rng.randint(1, tf_hi, size=docs.size), dls[docs], bs)
-        seg["salt"] = 0
-        entries.append({"term": term, "idf": ref_idf(n_docs, docs.size), "segments": [seg]})
+        tfs = rng.randint(1, tf_hi, size=docs.size)
+        cuts = [0, n_docs // 2, n_docs] if salted else [0, n_docs]
+        segs = []
+        for salt, (lo, hi) in enumerate(zip(cuts, cuts[1:])):
+            m = (docs >= lo) & (docs < hi)
+            if m.any():
+                seg = encode_segment(docs[m], tfs[m], dls[docs[m]], bs)
+                seg["salt"] = salt
+                segs.append(seg)
+        entries.append({"term": term, "idf": ref_idf(n_docs, docs.size), "segments": segs})
     n_blocks = sum(len(s["block_last_doc"]) for e in entries for s in e["segments"])
     decoded = []
     orig = wand._decode_blocks
@@ -326,11 +331,22 @@ def test_block_max_pruning_skips_blocks(monkeypatch, rare_at):
 
     monkeypatch.setattr(wand, "_decode_blocks", counting)
     cfg = BM25Config()
-    for k in (1, 5, 10):
+    edges = [0, 9_999, 20_001, 30_000, n_docs]
+    for k in (1, 10):
         decoded.clear()
-        got = wand.wand_topk(entries, k, cfg.k1, cfg.b, avgdl, bs)
-        assert got == _brute_force(entries, avgdl, k)
-        assert 0 < sum(decoded) < n_blocks / 4, (k, decoded, n_blocks)
+        partials = []
+        for lo, hi in zip(edges, edges[1:]):
+            partials += wand.wand_topk(entries, k, cfg.k1, cfg.b, avgdl, bs,
+                                       doc_lo=lo, doc_hi=hi)
+        merged = sorted(partials, key=lambda t: (-t[1], t[0]))[:k]
+        assert merged == _brute_force(entries, avgdl, k)
+        assert len(decoded) == 4
+        assert all(0 < n < n_blocks / 4 + 4 for n in decoded), (decoded, n_blocks)
+        # each range cuts through at most a block of a term at either end
+        assert sum(decoded) <= n_blocks + 3 * len(entries) * 2
+        decoded.clear()
+        assert wand.wand_topk(entries, k, cfg.k1, cfg.b, avgdl, bs) == merged
+        assert decoded == [n_blocks]
 
 
 @settings(max_examples=25, deadline=None)
@@ -368,23 +384,3 @@ def test_block_columns_as_lists_or_arrays(seed, k, min_match, use_after):
     arrays = wand_topk(as_arrays, k, cfg.k1, cfg.b, avgdl, 32, after=after, min_match=min_match)
     assert lists == arrays
     assert all(type(d) is int and type(s) is float for d, s in arrays)
-
-
-def test_properties_hold_through_rounds(monkeypatch):
-    """The properties above, with the kernel's round size forced down
-    so that the rounds plan about 2k postings each: at the default size
-    these small corpora mostly fit one exhaustive round, so this is
-    what puts the windows, θ pruning and the per-round candidate masks
-    under every property (roles, min_match, salts, ranges, tombstones,
-    search_after, list or array columns)."""
-    import xml_to_es_spark.operators.wand as wand
-
-    monkeypatch.setattr(wand, "_ROUND_POSTINGS", 1)
-    for seed in range(4):
-        for salted in (False, True):
-            test_wand_matches_bruteforce(seed, salted)
-    for seed in (0, 4):
-        test_wand_range_partition_merges_to_global(seed)
-    test_wand_property_ranges_and_tombstones()
-    test_wand_roles_property()
-    test_block_columns_as_lists_or_arrays()

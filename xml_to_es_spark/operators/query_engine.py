@@ -3,7 +3,7 @@
 The capability the reference delegates to ElasticSearch's `match`
 query (examples/mapping.json analyzed fields; IndexSpecPage.js:44-115
 exercises it) — built from scratch per BASELINE.json: BM25 k1=1.2,
-b=0.75, block-max pruned scoring over delta+varbyte postings,
+b=0.75, vectorized scoring over delta+varbyte postings,
 rank-identical (docIDs + scores) to the pyref oracle.
 
 Physical query plan (scale-first):
@@ -14,11 +14,11 @@ Physical query plan (scale-first):
   4. postings scan filtered the same way, joined to the BROADCAST
      query-term table (broadcast hash join — never a shuffle of the
      postings side);
-  5. top-k: block-max WAND (``operators/wand.py``) per (query,
+  5. top-k: the WAND kernel (``operators/wand.py``) per (query,
      dir[, range]) — OR ``match``, ``operator: and`` /
      minimum_should_match and flat bool specs (required, excluded
-     and optional cursors) — skipping blocks whose upper bound cannot
-     beat the running threshold, and summing in the pinned order
+     and optional terms) — one numpy pass over the group's blocks
+     (a range decodes only its blocks), summing in the pinned order
      (term-major lexicographic — identical to pyref, so scores are
      bit-equal);
   6. WAND batches under a posting-volume bound on a local index skip
@@ -55,9 +55,9 @@ TOPK_SCHEMA = "query_id long, rank int, doc_id long, score double"
 
 logger = logging.getLogger(__name__)
 
-# the postings columns one WAND cursor segment reads
+# the postings columns the WAND kernel reads from one segment
 _SEG_COLS = (
-    "salt", "n_docs", "block_last_doc", "block_max_tf", "block_min_dl",
+    "salt", "n_docs", "block_last_doc",
     "block_doc_off", "block_tf_off", "block_dl_off",
     "docs_bin", "tfs_bin", "dls_bin",
 )
@@ -935,9 +935,8 @@ class QueryEngine:
         pinned deterministic sum (bit-stable across jobs), so the
         cursor filters by exact sort-key comparison INSIDE the
         kernels: served docs are masked out of the candidates, the
-        kernel keeps k hits at any depth, and block-max pruning still
-        applies against the k-th best unserved score (unlike
-        ``from_``, which ranks from_+k rows). Ranks restart at 1 per
+        kernel keeps k hits at any depth (unlike ``from_``, which
+        ranks from_+k rows). Ranks restart at 1 per
         page.
 
         Where it runs: a batch whose matched posting volume (Σ live df
@@ -1067,9 +1066,8 @@ class QueryEngine:
         roles: Roles | None = None,
     ):
         """applyInPandas kernel: one (query, dir[, range]) group →
-        local block-max WAND top-k over that group's segments.
-        Tombstoned doc versions for the group's dir are skipped at
-        scoring time (bounds stay valid upper bounds)."""
+        local WAND top-k over that group's segments. Tombstoned doc
+        versions for the group's dir are masked out at scoring time."""
         k1, b, avgdl = self.cfg.k1, self.cfg.b, self.avgdl
         dead_by_ord = self._dead_by_ord
 
@@ -1754,7 +1752,7 @@ class QueryEngine:
         Where it runs: a batch whose specs are ALL flat and text-only
         (role → token string; ``filter`` a string or a list of
         ``{"match": text}`` clauses; no ``track_total_hits``) is
-        answered by the block-max WAND executor behind
+        answered by the WAND executor behind
         :meth:`topk_wand` — on the coordinator or on Spark by posting
         volume — with must/filter terms as required cursors, must_not
         terms as excluded cursors and should terms as optional ones;

@@ -1,50 +1,38 @@
-"""Block-max top-k over compressed posting segments, a window at a time.
+"""Top-k over compressed posting segments, scored in whole numpy vectors.
 
-Ding & Suel's block-max bounds, applied the way Lucene's
-``MaxScoreBulkScorer`` applies them, but scored in whole numpy vectors
-instead of one interpreted step per posting (published algorithms; no
-code taken from either):
+One pass per (query, dir[, doc range]) group, with no interpreted step
+per posting (the columnar, vectorized evaluation argued for in ICDE
+2025 "Columnar Formatted Inverted Index" and CIDR 2022 "Accelerating
+Python UDFs in Vectorized Query Execution"; no code taken from either):
 
-1. **Windows.** Every block of a term covers the doc interval from the
-   previous block's last doc (exclusive) to its own last doc; a
-   segment's first block starts at the segment's first doc, read from
-   the first bytes of its doc stream. The sorted union of these
-   boundaries over every term in the query (excluded terms included)
-   cuts the doc axis into elementary windows, each inside at most one
-   block of each term. A window's bound is the sum, over the scoring
-   terms, of ``weight`` × the term's bound for that block, evaluated at
-   (max_tf, min_dl) through the same float expression as a true
-   contribution. Optional terms count with their own block bound, not
-   their global maximum. A window that no block of some required term
-   covers, or fewer optional terms than ``min_match``, or that lies
-   outside ``doc_lo``/``doc_hi``, is dropped.
-2. **Rounds.** Windows are taken in bound-descending order. The first
-   round covers the highest-bound windows holding an estimated
-   ``max(2k, _ROUND_POSTINGS)`` postings (a block's count spread evenly
-   over the windows it covers); it seeds θ, the k-th best score so far.
-   Each later round takes the next windows whose bound is > θ − ``_EPS``,
-   planning ``_GROWTH`` times more postings than the round before, or
-   all of them when they hold under twice that, until no window is left
-   above θ. A query of at most twice the first round's postings is
-   scored in one exhaustive round, with no windows.
-   Only the blocks of a round's windows are decoded, each block at most
-   once over the whole call, and all of a round's blocks, every stream,
-   go through ONE :func:`varbyte_decode` (a segment whose every block is
-   needed is passed as its whole stream).
-3. **Scoring.** A round's postings that fall in its windows are merged
-   into one sorted candidate array, and each scoring term adds its
-   contributions into dense per-candidate accumulators, term-at-a-time in
-   term-lexicographic order, ``weight`` times each. Required counts,
-   ``min_match``, excluded docs, ``dead``, the doc range and ``after``
-   are applied as masks, and the top k are kept by (score desc,
-   doc_id asc).
+1. **Blocks.** Each term's salt-ordered segments chain into one block
+   directory: block last doc, delta base and posting count. A call
+   restricted to ``doc_lo``/``doc_hi`` picks only the blocks whose docs
+   can fall in that range; any other call picks every block.
+2. **Decode.** The picked blocks of every term — the doc stream of each
+   term, the tf and dl streams of the scoring ones — go through ONE
+   :func:`varbyte_decode` (values are self-delimiting, so whole-block
+   byte ranges concatenate into a valid stream; a segment whose every
+   block is picked goes in as its whole stream).
+3. **Scoring.** All postings merge into one sorted candidate array, and
+   each scoring term adds its contributions into dense per-candidate
+   accumulators, term-at-a-time in term-lexicographic order, ``weight``
+   times each. Required counts, ``min_match``, excluded docs, ``dead``,
+   the doc range and ``after`` are masks, and the top k are kept by
+   (score desc, doc_id asc).
 
-Exactness: a window is skipped only when its bound is <= θ − ``_EPS``
-(the slack sits on the conservative side), so every doc that could
-reach or tie the k-th best score, including exact ties won on the
-doc_id tie-break, is scored. Scores are summed in the pinned term order
-with each term added ``weight`` times, starting from 0.0, so they are
-bit-equal to the exhaustive pyref sum (asserted in tests).
+No block is skipped on a score bound. The segments still carry
+Ding & Suel per-block (max_tf, min_dl) bounds, but block-max rounds
+(bound-ordered doc windows, θ seeded by the first round) cost more
+than this single pass on every measured query mix: they skipped 0 of
+34 blocks on the one benchmark (2.5k-page) call large enough to try
+them, and 1–4 % of blocks at 10k pages, where the 63-query OR, ``and``
+and ``bool`` batches took 15–30 % longer than one pass (CHANGES.md).
+
+Exactness: every posting of a picked block is scored, and scores are
+summed in the pinned term order with each term added ``weight`` times,
+starting from 0.0, so they are bit-equal to the exhaustive pyref sum
+(asserted in tests).
 
 A term whose posting list is salted arrives as several (salt) segments
 covering disjoint ascending doc_id ranges; its blocks chain across them
@@ -58,16 +46,7 @@ import numpy as np
 
 from xml_to_es_spark.operators.postings import varbyte_decode
 
-_EPS = 1e-12
 _OPT, _REQ, _EXCL = 0, 1, 2
-# the first round plans at least this many postings (and 2k); each later
-# round plans _GROWTH times more. Windows plus a second round cost about
-# as much as scoring 1.5k postings (63-query OR batches over a 2.5k-page
-# corpus, 4-core Xeon: the windowed rounds took 0.25 ms per query more
-# than one exhaustive pass and skipped 6 of 2 124 blocks), so a query
-# under twice this is cheaper scored in one exhaustive round
-_ROUND_POSTINGS = 2048
-_GROWTH = 4
 
 
 def _contrib(idf, tf, dl, k1: float, b: float, avgdl: float):
@@ -75,61 +54,33 @@ def _contrib(idf, tf, dl, k1: float, b: float, avgdl: float):
     return idf * (tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl)))
 
 
-def _first_doc(docs_bin: bytes) -> int:
-    """A segment's first doc id: the first value of its doc stream (the
-    first delta is absolute), read from at most 10 bytes."""
-    v = 0
-    for i, byte in enumerate(docs_bin[:10]):
-        v |= (byte & 0x7F) << (7 * i)
-        if byte < 0x80:
-            break
-    return v - (1 << 64) if v >= 1 << 63 else v  # int64 ids wrap in the codec
-
-
 class _Blocks:
     """One entry's block directory: its salt-ordered segments' blocks
-    chained into one ascending list. Block i holds docs in
-    (``lo[i]``, ``last[i]``]: ``lo`` is the previous block's last doc, or
-    a segment's first doc - 1 for its first block. Each block also has
-    its delta base (the previous block's last doc in the same segment, 0
-    for a segment's first), posting count and weighted score bound.
-    ``lo``, ``cnt`` and ``ub`` carry one extra entry at index ``nb``, the
-    "no block" of windows no block covers."""
+    chained into one ascending list. Block i ends at doc ``last[i]``
+    and holds ``cnt[i]`` postings, delta-coded from ``base[i]`` (the
+    previous block's last doc in the same segment, 0 for a segment's
+    first)."""
 
     __slots__ = ("role", "weight", "idf", "avgdl", "segs", "seg_start",
-                 "n", "nb", "last", "lo", "base", "cnt", "ub")
+                 "nb", "last", "base", "cnt")
 
-    def __init__(self, e: dict, role: int, weight: int, k1: float, b: float,
-                 avgdl: float, block_size: int):
+    def __init__(self, e: dict, role: int, weight: int, avgdl: float,
+                 block_size: int):
         self.role, self.weight = role, weight
         self.idf, self.avgdl = float(e["idf"]), avgdl
         self.segs = sorted(e["segments"], key=lambda s: s["salt"])
         last = [np.asarray(s["block_last_doc"], dtype=np.int64) for s in self.segs]
         self.last = last[0] if len(last) == 1 else np.concatenate(last)
-        self.nb = nb = self.last.size
+        self.nb = self.last.size
+        self.base = np.empty(self.nb, dtype=np.int64)
+        self.base[1:] = self.last[:-1]
+        self.cnt = np.full(self.nb, block_size, dtype=np.int64)
         self.seg_start = [0]
-        self.cnt = np.full(nb + 1, block_size, dtype=np.int64)
-        self.lo = np.empty(nb + 1, dtype=np.int64)
-        self.lo[1:nb] = self.last[:-1]
-        self.lo[nb] = np.iinfo(np.int64).max
-        self.base = self.lo[:nb].copy()
         for seg, bl in zip(self.segs, last):
             at = self.seg_start[-1]
             self.seg_start.append(at + bl.size)
-            self.lo[at] = _first_doc(seg["docs_bin"]) - 1
             self.base[at] = 0  # a segment's first delta is absolute
             self.cnt[at + bl.size - 1] = int(seg["n_docs"]) - (bl.size - 1) * block_size
-        self.cnt[nb] = 0
-        self.n = sum(int(seg["n_docs"]) for seg in self.segs)
-        self.ub = None
-        if weight:
-            tf = np.empty(nb)
-            dl = np.empty(nb)
-            for seg, lo, hi in zip(self.segs, self.seg_start, self.seg_start[1:]):
-                tf[lo:hi] = seg["block_max_tf"]
-                dl[lo:hi] = seg["block_min_dl"]
-            self.ub = np.zeros(nb + 1)
-            self.ub[:nb] = _contrib(self.idf, tf, dl, k1, b, avgdl) * weight
 
 
 _STREAMS = (
@@ -143,10 +94,8 @@ def _decode_blocks(terms: list[_Blocks], picks: list[np.ndarray], k1: float,
                    b: float) -> list[tuple[np.ndarray, np.ndarray | None]]:
     """Decode the picked blocks (ascending flat block indices per term)
     of every term: the doc stream of every term and the tf and dl
-    streams of the scoring ones, all in ONE varbyte decode (values are
-    self-delimiting, so whole-block byte ranges concatenate into a valid
-    stream; a segment whose every block is picked goes in whole).
-    Returns per term (doc_ids, contributions or None)."""
+    streams of the scoring ones, all in ONE varbyte decode. Returns per
+    term (doc_ids, contributions or None)."""
     parts: tuple[list, list, list] = ([], [], [])
     cnt, base, sizes = [], [], []
     for t, p in zip(terms, picks):
@@ -232,18 +181,17 @@ def wand_topk(
     ``doc_lo``/``doc_hi`` (half-open) restrict evaluation to a doc_id
     RANGE: the distributed path runs one local top-k per (query, range)
     — a doc's contributions all live in its range, so per-range top-k
-    lists merge into the exact global top-k with no re-summation.
+    lists merge into the exact global top-k with no re-summation. Only
+    the blocks that can hold docs of the range are decoded.
 
     ``dead`` (sorted int64 array) lists tombstoned doc_ids whose
     stored version here is superseded by a delta index: they are
-    masked out of the candidates (block bounds stay valid upper
-    bounds, so pruning is unaffected).
+    masked out of the candidates.
 
     ``after`` = (score, doc_id): ES search_after — only hits STRICTLY
     after that sort key in (score desc, doc_id asc) order are kept.
     Exact float equality is safe here: this path's scores are the
-    pinned deterministic sum, bit-stable across jobs. θ is the k-th
-    best of the kept hits, so deep pages still prune windows."""
+    pinned deterministic sum, bit-stable across jobs."""
     entries = sorted(term_entries, key=lambda e: e["term"])
     if any(e.get("required") and not e["segments"] for e in entries):
         return []
@@ -253,152 +201,61 @@ def wand_topk(
             continue
         role = _REQ if e.get("required") else _EXCL if e.get("excluded") else _OPT
         weight = 0 if role == _EXCL else int(e.get("weight", 1))
-        terms.append(_Blocks(e, role, weight, k1, b, e.get("avgdl", avgdl), block_size))
+        terms.append(_Blocks(e, role, weight, e.get("avgdl", avgdl), block_size))
     n_req = sum(t.role == _REQ for t in terms)
     n_opt = sum(t.role == _OPT for t in terms)
     need = min_match if n_req else max(min_match, 1)
     if k <= 0 or n_opt < need:
         return []
 
-    def hits(sel: list[tuple]) -> tuple[np.ndarray, np.ndarray]:
-        """(doc_ids, scores) of the candidates among one round's
-        postings (per term: doc_ids, contributions) that pass every
-        mask."""
-        cand, inv = np.unique(np.concatenate([d for d, _x in sel]), return_inverse=True)
-        ok = np.ones(cand.size, dtype=bool)
-        req_n = np.zeros(cand.size, dtype=np.int64) if n_req else None
-        # with no required term and need 1, every candidate left after
-        # the excluded mask holds an optional term: no count needed
-        opt_n = np.zeros(cand.size, dtype=np.int64) if need > 1 or (n_req and need) else None
-        acc = np.zeros(cand.size)
-        at = 0
-        for t, (d, x) in zip(terms, sel):
-            ix = inv[at: at + d.size]
-            at += d.size
-            if t.role == _EXCL:
-                ok[ix] = False
-            elif t.role == _REQ:
-                req_n[ix] += 1
-            elif opt_n is not None:
-                opt_n[ix] += 1
-            for _ in range(t.weight):  # e.g. a must+should token adds twice
-                acc[ix] += x
-        if req_n is not None:
-            ok &= req_n == n_req
-        if opt_n is not None:
-            ok &= opt_n >= need
-        if doc_lo is not None:
-            ok &= cand >= doc_lo
-        if doc_hi is not None:
-            ok &= cand < doc_hi
-        if dead is not None and dead.size:
-            ok &= dead[np.minimum(np.searchsorted(dead, cand), dead.size - 1)] != cand
-        if after is not None:
-            ok &= (acc < after[0]) | ((acc == after[0]) & (cand > after[1]))
-        return cand[ok], acc[ok]
-
-    target = float(max(2 * k, _ROUND_POSTINGS))
-    if sum(t.n for t in terms) <= 2 * target:
-        # smaller than a round: one exhaustive round, no windows
-        d, s = hits(_decode_blocks(terms, [np.arange(t.nb) for t in terms], k1, b))
-        d, s = _top(d, s, k)
-        return list(zip(d.tolist(), s.tolist()))
-
-    # -- windows: right edges, each term's block per window, bounds -----
-    edges = np.unique(np.concatenate(
-        [t.last for t in terms] + [t.lo[t.seg_start[:-1]] for t in terms]
-    ))
-    m = edges.size
-    bound = np.zeros(m)
-    alive = np.ones(m, dtype=bool)
-    opt_cover = np.zeros(m, dtype=np.int64)
-    est = np.full(m, np.inf) if n_req else np.zeros(m)
-    blk_of = []  # per term: its block covering each window (nb: none)
+    picks = []
     for t in terms:
-        j = np.searchsorted(t.last, edges)
-        j[edges <= t.lo[j]] = t.nb  # before a segment's first doc
-        blk_of.append(j)
-        if t.weight:
-            bound += t.ub[j]
+        pick = np.ones(t.nb, dtype=bool)
+        if doc_lo is not None:
+            pick &= t.last >= doc_lo
+        if doc_hi is not None:
+            # block i's first doc is past block i-1's last
+            pick[1:] &= t.last[:-1] < doc_hi - 1
+        picks.append(np.flatnonzero(pick))
+    if not any(p.size for t, p in zip(terms, picks) if t.role != _EXCL):
+        return []
+    sel = _decode_blocks(terms, picks, k1, b)
+
+    cand, inv = np.unique(np.concatenate([d for d, _x in sel]), return_inverse=True)
+    ok = np.ones(cand.size, dtype=bool)
+    req_n = np.zeros(cand.size, dtype=np.int64) if n_req else None
+    # with no required term and need 1, every candidate left after the
+    # excluded mask holds an optional term: no count needed
+    opt_n = np.zeros(cand.size, dtype=np.int64) if need > 1 or (n_req and need) else None
+    acc = np.zeros(cand.size)
+    at = 0
+    for t, (d, x) in zip(terms, sel):
+        ix = inv[at: at + d.size]
+        at += d.size
         if t.role == _EXCL:
-            continue
-        # postings estimate: a block's count spread evenly over the
-        # windows it covers
-        share = t.cnt[j] / np.bincount(j, minlength=t.nb + 1)[j]
-        if t.role == _REQ:
-            alive &= j < t.nb
-            est = np.minimum(est, share)
-        else:
-            opt_cover += j < t.nb
-            est += share
-    if need:
-        alive &= opt_cover >= need
+            ok[ix] = False
+        elif t.role == _REQ:
+            req_n[ix] += 1
+        elif opt_n is not None:
+            opt_n[ix] += 1
+        for _ in range(t.weight):  # e.g. a must+should token adds twice
+            acc[ix] += x
+    if req_n is not None:
+        ok &= req_n == n_req
+    if opt_n is not None:
+        ok &= opt_n >= need
     if doc_lo is not None:
-        alive &= edges >= doc_lo
+        ok &= cand >= doc_lo
     if doc_hi is not None:
-        alive[1:] &= edges[:-1] < doc_hi - 1  # a window starts past its left edge
-    order = np.flatnonzero(alive)
-    order = order[np.argsort(-bound[order], kind="stable")]
-    est = est[order]
-
-    # -- rounds ------------------------------------------------------------
-    done = [np.zeros(t.nb + 1, dtype=bool) for t in terms]
-    for t, dn in zip(terms, done):
-        dn[t.nb] = True  # "no block" is never decoded
-    post: list[list] = [[] for _ in terms]  # per term: decoded (docs, contribs)
-    top_d = np.zeros(0, dtype=np.int64)
-    top_s = np.zeros(0)
-    theta = -np.inf
-    pos = 0
-    while pos < order.size:
-        n_rest = int(np.count_nonzero(bound[order[pos:]] > theta - _EPS))
-        if not n_rest:
-            break  # bounds descend, so no later window can reach θ
-        # the highest-bound windows holding about ``target`` postings,
-        # or all that are left above θ when they hold under twice that
-        cum = np.cumsum(est[pos: pos + n_rest])
-        take = n_rest
-        if cum[-1] > 2 * target:
-            take = int(np.searchsorted(cum, target)) + 1
-        target *= _GROWTH
-        batch = order[pos: pos + take]
-        pos += batch.size
-        # decode the blocks of this round's windows not decoded before
-        picks = []
-        for t, j, dn in zip(terms, blk_of, done):
-            mark = np.zeros(t.nb + 1, dtype=bool)
-            mark[j[batch]] = True
-            p = np.flatnonzero(mark & ~dn)
-            dn[p] = True
-            picks.append(p)
-        if any(p.size for p in picks):
-            for chunks, got in zip(post, _decode_blocks(terms, picks, k1, b)):
-                if got[0].size:
-                    chunks.append(got)
-        # candidates: the decoded postings that fall in this round's windows
-        in_batch = np.zeros(m, dtype=bool)
-        in_batch[batch] = True
-        sel = []
-        for t, chunks in zip(terms, post):
-            if not chunks:
-                sel.append((np.zeros(0, np.int64), np.zeros(0)))
-                continue
-            d = np.concatenate([c[0] for c in chunks])
-            keep = in_batch[np.searchsorted(edges, d)]
-            x = np.concatenate([c[1] for c in chunks])[keep] if t.weight else None
-            sel.append((d[keep], x))
-        d, s = hits(sel)
-        top_d, top_s = _top(np.concatenate((top_d, d)), np.concatenate((top_s, s)), k)
-        if top_d.size == k:
-            theta = float(top_s[-1])
-    return list(zip(top_d.tolist(), top_s.tolist()))
-
-
-def _top(d: np.ndarray, s: np.ndarray, k: int) -> tuple[np.ndarray, np.ndarray]:
-    """The k best (doc_id, score) pairs by (score desc, doc_id asc)."""
+        ok &= cand < doc_hi
+    if dead is not None and dead.size:
+        ok &= dead[np.minimum(np.searchsorted(dead, cand), dead.size - 1)] != cand
+    if after is not None:
+        ok &= (acc < after[0]) | ((acc == after[0]) & (cand > after[1]))
+    d, s = cand[ok], acc[ok]
     if s.size > k:
         # only scores >= the k-th best can rank; ties stay in
         keep = s >= np.partition(s, s.size - k)[s.size - k]
         d, s = d[keep], s[keep]
     best = np.lexsort((d, -s))[:k]
-    return d[best], s[best]
+    return list(zip(d[best].tolist(), s[best].tolist()))
