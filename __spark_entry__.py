@@ -3473,7 +3473,7 @@ def _sql_lit(v) -> str:
 
 def _struct_pred_sql(clauses: list) -> str:
     """One query's structured filter clauses → a DuckDB predicate over
-    documents d — the SQL twin of QueryEngine._structured_pred."""
+    documents d — the twin of QueryEngine._structured_pred_sql."""
     ops = {"gte": ">=", "gt": ">", "lte": "<=", "lt": "<"}
     parts = []
     for cl in clauses:

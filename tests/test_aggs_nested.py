@@ -398,3 +398,26 @@ def test_rare_terms_rejects_size(eng):
                       "aggs": {"r": {"rare_terms": {
                           "field": "lang", "max_doc_count": 2,
                           "size": 3}}}})
+
+
+def test_filter_literal_kinds(eng):
+    """Every literal kind a structured filter accepts compiles to SQL
+    text: date/datetime bounds match their ISO-string twins, and
+    ±infinity and NaN compare as doubles."""
+    import datetime as dt
+
+    e, _pdf = eng
+
+    def count(*filters):
+        out = e.bool_count(
+            [(1, {"must": "alpha", "filter": list(filters)})]
+        ).toPandas()
+        return int(out.total.iat[0])
+
+    iso = count({"range": {"ts": {"gte": "2024-01-11", "lt": "2024-01-21"}}})
+    assert iso == 10
+    assert count({"range": {"ts": {
+        "gte": dt.date(2024, 1, 11), "lt": dt.datetime(2024, 1, 21)}}}) == iso
+    assert count({"range": {"n_chars": {
+        "gt": float("-inf"), "lt": float("inf")}}}) == N
+    assert count({"term": {"n_chars": float("nan")}}) == 0

@@ -261,3 +261,48 @@ def test_named_queries_dsl_route(eng):
         want = (["base", "has_beta"] if int(r["doc_id"]) % 2 == 0
                 else ["base"])
         assert list(r["matched_queries"]) == want
+
+
+def test_literal_attach_bound_both_sides(eng, monkeypatch):
+    """Both sides of the attach switch — the literal map expression up
+    to ``QueryEngine._LITERAL_ATTACH_MAX`` (query, term) rows, the
+    broadcast join above it — return identical rows for a flat
+    structured bool, a rich tree with ``_name`` and ``terms_set``."""
+    from xml_to_es_spark.plans import explain_str
+
+    req = eng.spark.createDataFrame(pd.DataFrame(
+        {"doc_id": range(60), "req": [1 + i % 2 for i in range(60)]}
+    ))
+
+    def run():
+        flat = eng.bool_topk([
+            (1, {"must": "alpha", "should": "beta",
+                 "filter": [{"term": {"lang": "en"}},
+                            {"range": {"n_chars": {"gte": 150}}}]}),
+            (2, {"should": "gamma delta", "must_not": "beta",
+                 "filter": [{"terms": {"lang": ["de", "fr"]}}]}),
+        ], k=60)
+        rich = _p(eng.bool_topk([
+            (3, {"must": [{"match": {"query": "alpha gamma", "_name": "ag"}}],
+                 "should": [{"bool": {"should": [{"match": "delta"}],
+                                      "_name": "inner"}}],
+                 "filter": [{"term": {"lang": "en"}}]}),
+        ], k=60))
+        rich["matched_queries"] = rich["matched_queries"].map(tuple)
+        tset = eng.terms_set_topk([(4, {
+            "terms": ["alpha", "beta", "gamma"],
+            "minimum_should_match_field": "req"})], k=60, docs=req)
+        return explain_str(flat, "simple"), [_p(flat), rich, _p(tset)]
+
+    plan_lit, default = run()
+    monkeypatch.setattr(QueryEngine, "_LITERAL_ATTACH_MAX", 0)
+    plan_bc, forced = run()
+    assert "explode(element_at(map(" in plan_lit
+    assert "explode(element_at(map(" not in plan_bc
+    assert all(len(d) for d in default)
+    assert any(set(mq) == {"ag", "inner"} for mq in default[1].matched_queries)
+    for a, b in zip(default, forced):
+        pd.testing.assert_frame_equal(
+            a.drop(columns="score"), b.drop(columns="score")
+        )
+        np.testing.assert_allclose(a.score, b.score, rtol=1e-12)

@@ -1061,3 +1061,32 @@ def test_pinned_deep_page(eng):
     # from=0 unchanged
     out0 = es_search(eng, {**body, "size": 4}).toPandas()
     assert list(out0.doc_id) == want_full[:4]
+
+
+def test_dsl_bool_filter_multi_token_match_is_or(spark, tmp_path_factory):
+    """A multi-token ``match`` under ``filter`` ORs its tokens, as ES
+    does: the flat filter translation used to AND them, so this body
+    matched doc 2 only, while the same clause wrapped in a nested bool
+    (the rich form) matched docs 0-2."""
+    pdf = pd.DataFrame({
+        "doc_id": range(4),
+        "text": ["alpha hash", "alpha join", "alpha hash join", "alpha other"],
+    })
+    idx = str(tmp_path_factory.mktemp("dsl_filter_or") / "idx")
+    IndexBuilder(spark, IndexConfig(n_groups=1)).build(
+        spark.createDataFrame(pdf), idx
+    )
+    e = QueryEngine(spark, idx)
+    clause = {"match": {"text": "hash join"}}
+    flat = es_search(e, {"query": {"bool": {
+        "must": [{"match": {"text": "alpha"}}], "filter": [clause]}},
+        "size": 10}).toPandas()
+    nested = es_search(e, {"query": {"bool": {
+        "must": [{"match": {"text": "alpha"}}],
+        "filter": [{"bool": {"must": [clause]}}]}},
+        "size": 10}).toPandas()
+    assert sorted(flat.doc_id) == sorted(nested.doc_id) == [0, 1, 2]
+    # filter context: the score is the must clause's alone
+    np.testing.assert_allclose(
+        flat.sort_values("doc_id").score, nested.sort_values("doc_id").score
+    )

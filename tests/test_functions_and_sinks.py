@@ -138,3 +138,16 @@ def test_plan_pushdown_and_broadcast(spark, sf_dir):
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     j = li.join(F.broadcast(orders), li.l_orderkey == orders.o_orderkey)
     assert_broadcast_join(j)
+
+
+def test_iceberg_available_false_without_runtime(spark, caplog):
+    """A missing Iceberg runtime class reads as False (the Parquet
+    fallback) and the JVM's ClassNotFoundException reaches the DEBUG
+    log instead of being dropped."""
+    import logging
+
+    from xml_to_es_spark.sources.pages import iceberg_available
+
+    with caplog.at_level(logging.DEBUG, logger="xml_to_es_spark.sources.pages"):
+        assert iceberg_available(spark) is False
+    assert any("Iceberg runtime" in r.message for r in caplog.records)

@@ -6,7 +6,6 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from xml_to_es_spark.operators.postings import (
-    block_score_upper_bounds,
     decode_segment,
     encode_segment,
     varbyte_decode,
@@ -113,19 +112,3 @@ def test_decode_positions_rejects_zero_tf():
         decode_positions(seg["pos_bin"], np.array([1, 0, 2], dtype=np.int64))
     back = decode_positions(seg["pos_bin"], np.array([1, 2], dtype=np.int64))
     assert [list(p) for p in back] == [[2], [0, 7]]
-
-
-def test_block_upper_bounds_dominate_true_scores():
-    rng = np.random.RandomState(11)
-    doc_ids = np.cumsum(rng.randint(1, 9, size=400)).astype(np.int64)
-    tfs = rng.randint(1, 30, size=400).astype(np.int64)
-    dls = rng.randint(20, 800, size=400).astype(np.int64)
-    seg = encode_segment(doc_ids, tfs, dls, block_size=64)
-    k1, b, avgdl, idf = 1.2, 0.75, 300.0, 2.5
-    ubs = block_score_upper_bounds(
-        seg["block_max_tf"], seg["block_min_dl"], idf, avgdl, k1, b
-    )
-    true = idf * tfs * (k1 + 1) / (tfs + k1 * (1 - b + b * dls / avgdl))
-    for blk in range(len(ubs)):
-        lo, hi = blk * 64, min((blk + 1) * 64, 400)
-        assert (true[lo:hi] <= ubs[blk] + 1e-12).all()

@@ -413,3 +413,58 @@ def test_legacy_markerless_delta_still_visible(spark, tmp_path):
     assert load_kills(spark, idx) == {3: 1}  # legacy shared-log kill valid
     after = QueryEngine(spark, idx).topk(QUERIES, k=10).toPandas()
     _assert_same(after, before)
+
+
+def test_base_with_block_bound_columns_matches_rebuild(spark, tmp_path, wand_sides):
+    """Indexes written while the postings still carried the per-block
+    bound columns (block_max_tf, block_min_dl) stay readable: such a
+    base beside an upsert delta without them — and its compaction —
+    answers exactly like a rebuild of the updated corpus."""
+    from pathlib import Path
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    v1 = _corpus_v1()
+    idx = str(tmp_path / "old_idx")
+    IndexBuilder(spark, CFG).build(spark.createDataFrame(v1), idx)
+    # rewrite the base postings in the older layout
+    post = Path(idx, "postings")
+    for crc in post.rglob("*.crc"):
+        crc.unlink()
+    files = sorted(post.rglob("*.parquet"))
+    assert files
+    for f in files:
+        t = pq.read_table(f)
+        blocks = [len(b) for b in t.column("block_last_doc").to_pylist()]
+        for name in ("block_max_tf", "block_min_dl"):
+            t = t.append_column(name, pa.array(
+                [[1] * n for n in blocks], type=pa.list_(pa.int64())
+            ))
+        # drop Spark's stored row schema, which would hide the columns
+        pq.write_table(t.replace_schema_metadata(None), f)
+    assert "block_max_tf" in spark.read.parquet(str(post)).columns
+
+    v2 = _mutate(v1, {5: "omega beta fresh text"}, {200: "omega alpha new page"})
+    assert IndexBuilder(spark, CFG).upsert(spark.createDataFrame(v2), idx)["mode"] == "delta"
+    assert "block_max_tf" not in spark.read.parquet(
+        f"{idx}/deltas/delta=1/postings").columns
+    compacted = str(tmp_path / "old_idx_compacted")
+    IndexBuilder(spark, CFG).compact(idx, compacted)
+    rebuild = str(tmp_path / "rebuild")
+    IndexBuilder(spark, CFG).build(spark.createDataFrame(v2), rebuild)
+
+    tree = [(9, {"must": [{"match": "alpha"}],
+                 "should": [{"match": "omega beta"}]})]
+    _, fresh = _rankings(spark, rebuild, wand_sides)
+    want_bool = QueryEngine(spark, rebuild).bool_topk(tree, k=10).toPandas()
+    for path in (idx, compacted):
+        _, got = _rankings(spark, path, wand_sides)
+        _assert_same(got["topk"], fresh["topk"])
+        for key in WAND_KEYS:
+            _assert_same(got[key], fresh["topk"])
+        _assert_same(got["dist"], fresh["dist"], exact_scores=False)
+        _assert_same(
+            QueryEngine(spark, path).bool_topk(tree, k=10).toPandas(),
+            want_bool, exact_scores=False,
+        )

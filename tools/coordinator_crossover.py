@@ -109,8 +109,9 @@ def measure(eng, kind: str, qs_list, reps: int, n_ranges: int | None) -> dict:
     """Median ms of each side over ``reps`` passes of ``qs_list``
     (sides alternate within a pass) and the median matched volume."""
     coord, dist, mismatches = [], [], 0
-    timed(eng, kind, qs_list[0], float("inf"), n_ranges)  # warm both sides
-    timed(eng, kind, qs_list[0], 0, n_ranges)
+    for qs in qs_list:  # one untimed pass warms both sides
+        timed(eng, kind, qs, float("inf"), n_ranges)
+        timed(eng, kind, qs, 0, n_ranges)
     for _ in range(reps):
         for qs in qs_list:
             tc, rc = timed(eng, kind, qs, float("inf"), n_ranges)

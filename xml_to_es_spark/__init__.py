@@ -11,7 +11,7 @@ see /root/reference) as an idiomatic Spark engine:
 - **Index build** (the half the reference delegates to ElasticSearch,
   ElasticIndexer.js:76): from-scratch inverted-index construction —
   tokenize → per-(term, salt) posting lists, delta + varbyte compressed
-  with block-max metadata (`operators.postings`), built by a
+  with per-block offsets (`operators.postings`), built by a
   checkpoint-resumable, skew-salted, range-merged Spark job
   (`operators.index_build`).
 - **Query engine**: BM25 (k1=1.2, b=0.75) top-k over the compressed

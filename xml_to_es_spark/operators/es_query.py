@@ -695,7 +695,7 @@ class EsRequest:
                     # scores are unused under sort-by-field: strip the
                     # score-only keys (score_mode/boost/_name) so the
                     # path+query filter form is what reaches
-                    # _structured_pred (round-6 ADVICE: the full spec
+                    # _structured_pred_sql (round-6 ADVICE: the full spec
                     # used to raise a misleading 'path + query' error)
                     spec = {
                         k2: v for k2, v in spec.items()
@@ -823,9 +823,9 @@ class EsRequest:
                     F.col("doc_id").isin(ids)
                 ).select(
                     "doc_id",
-                    F.filter(
-                        F.col(path),
-                        QueryEngine._nested_elem_pred(path, q),
+                    F.expr(
+                        f"filter({QueryEngine._sql_ident(path)}, x -> "
+                        f"{QueryEngine._nested_elem_sql(path, q)})"
                     ).alias("inner_hits"),
                 )
                 out = out.join(F.broadcast(objs), "doc_id", "left").select(
@@ -1300,9 +1300,9 @@ class EsRequest:
         nested-tree path: bool-level minimum_should_match / boost,
         nested bool sub-clauses, per-clause boost/operator options,
         mixed clause fields, structured clauses outside the filter
-        role, or a multi-token match clause under must (the legacy
-        flat translation would silently AND its tokens — the round-4
-        ADVICE defect). Flat single-token bodies keep the legacy
+        role, or a multi-token match clause under must or filter (the
+        legacy flat translation would silently AND its tokens, where
+        ES ORs them). Flat single-token bodies keep the legacy
         translation, bit-identical to the direct engine call."""
         if ("minimum_should_match" in spec or "boost" in spec
                 or "_name" in spec):
@@ -1335,7 +1335,8 @@ class EsRequest:
                 if "boost" in opts or "operator" in opts or "_name" in opts:
                     return True
                 fields.add(self._resolve_match_field(fld))
-                if role == "must" and len(self.eng._tokenize(opts["query"])) > 1:
+                if (role in ("must", "filter")
+                        and len(self.eng._tokenize(opts["query"])) > 1):
                     return True
         return len(fields) > 1
 
@@ -2056,7 +2057,7 @@ class EsRequest:
                 f"vectors have {probe[0]['d']}"
             )
         for c in (filters or []):
-            dv = dv.filter(self.eng._structured_pred(c))
+            dv = dv.filter(F.expr(self.eng._structured_pred_sql(c)))
         qdf = local_rows_df(self.eng.spark, 
             [(0, qv)], schema="query_id long, q_vec array<double>"
         )

@@ -65,8 +65,7 @@ from xml_to_es_spark.session import local_rows_df
 POSTINGS_SCHEMA = (
     "group int, term string, salt int, n_docs long, first_doc long, "
     "max_tf long, seg_bytes long, "
-    "block_last_doc array<long>, block_max_tf array<long>, "
-    "block_min_dl array<long>, block_doc_off array<long>, "
+    "block_last_doc array<long>, block_doc_off array<long>, "
     "block_tf_off array<long>, block_dl_off array<long>, "
     "docs_bin binary, tfs_bin binary, dls_bin binary, "
     "pos_bin binary, block_pos_off array<long>"
@@ -272,8 +271,7 @@ def _encode_stream(cfg_block: int, with_positions: bool = False):
             rows.append(seg)
         cols = [
             "group", "term", "salt", "n_docs", "first_doc", "max_tf", "seg_bytes",
-            "block_last_doc", "block_max_tf", "block_min_dl",
-            "block_doc_off", "block_tf_off", "block_dl_off",
+            "block_last_doc", "block_doc_off", "block_tf_off", "block_dl_off",
             "docs_bin", "tfs_bin", "dls_bin", "pos_bin", "block_pos_off",
         ]
         return pd.DataFrame(rows, columns=cols)

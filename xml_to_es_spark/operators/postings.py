@@ -1,4 +1,4 @@
-"""Posting-list physical format: delta + varbyte with block-max metadata.
+"""Posting-list physical format: delta + varbyte with per-block offsets.
 
 The reference delegates index physics to ElasticSearch/Lucene
 (ElasticIndexer.js:76); BASELINE.json pins our from-scratch format:
@@ -6,9 +6,9 @@ per (term, salt) segment, doc_ids sorted ascending are delta-encoded
 and varbyte-compressed; tf and doc-length streams are varbyte too
 (storing dl in the posting makes BM25 scoring join-free at query
 time — no 10^12-row doc-length join at Common-Crawl scale). Every
-``BLOCK_SIZE`` postings we record (last_doc_id, max_tf, min_dl) —
-enough to compute a block score upper bound at query time for
-block-max WAND / MaxScore skipping.
+``BLOCK_SIZE`` postings we record the block's last doc_id and its
+byte offset in each stream, so a doc-range task decodes only the
+blocks that overlap its range.
 
 All encode/decode paths are numpy-vectorized (loops are over *byte
 positions* — ≤10 iterations — never over postings), so they run fast
@@ -113,14 +113,10 @@ def encode_segment(
         deltas[1:] = np.diff(doc_ids).astype(np.uint64)
     nblocks = (n + block_size - 1) // block_size
     pad = nblocks * block_size - n
-    # block-max metadata: per block (last doc, max tf, min dl)
+    # per-block skip metadata: each block's last doc
     di = np.pad(doc_ids, (0, pad), constant_values=doc_ids[-1]).reshape(nblocks, block_size)
-    ti = np.pad(tfs, (0, pad), constant_values=0).reshape(nblocks, block_size)
-    li = np.pad(dls, (0, pad), constant_values=np.iinfo(np.int64).max).reshape(
-        nblocks, block_size
-    )
-    # per-block byte offsets → blocks decode independently (lazy
-    # block-max WAND skipping never touches skipped bytes)
+    # per-block byte offsets → blocks decode independently (a
+    # doc-range task never touches the bytes of other ranges)
     def block_offsets(vals: np.ndarray) -> list[int]:
         ends = np.cumsum(varbyte_lengths(vals))
         starts = np.concatenate([[0], ends[:-1]])
@@ -164,8 +160,6 @@ def encode_segment(
         "max_tf": int(tfs.max()),
         "seg_bytes": len(docs_bin) + len(tfs_bin) + len(dls_bin),
         "block_last_doc": di[:, -1].astype(np.int64).tolist(),
-        "block_max_tf": ti.max(axis=1).astype(np.int64).tolist(),
-        "block_min_dl": li.min(axis=1).astype(np.int64).tolist(),
         "block_doc_off": block_offsets(deltas),
         "block_tf_off": block_offsets(tfs.astype(np.uint64)),
         "block_dl_off": block_offsets(dls.astype(np.uint64)),
@@ -204,19 +198,3 @@ def decode_positions(pos_bin: bytes, tfs: np.ndarray) -> list[np.ndarray]:
     shift = np.where(starts > 0, cum[np.maximum(starts - 1, 0)], 0)
     flat = cum - np.repeat(shift, tfs)
     return np.split(flat, ends[:-1])
-
-
-def block_score_upper_bounds(
-    block_max_tf: np.ndarray,
-    block_min_dl: np.ndarray,
-    idf: float,
-    avgdl: float,
-    k1: float,
-    b: float,
-) -> np.ndarray:
-    """Per-block BM25 contribution upper bound (saturation is monotone
-    increasing in tf and decreasing in dl, so (max_tf, min_dl) bounds
-    the block)."""
-    tf = np.asarray(block_max_tf, dtype=np.float64)
-    dl = np.asarray(block_min_dl, dtype=np.float64)
-    return idf * (tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl)))

@@ -24,19 +24,25 @@ Physical query plan (scale-first):
   6. WAND batches under a posting-volume bound on a local index skip
      the Spark job: the driver reads the pruned segments with pyarrow
      and runs the same kernel (``_wand_coordinator``);
-  7. the hash-aggregate paths (rich bool trees, structured filters,
-     aggregations) decode segments in an Arrow-batched kernel that
-     emits (query_id, doc_id, contrib) — doc lengths are co-located
-     in the posting (dls_bin), so scoring needs NO join to a
-     10^12-row docs table — and aggregate in the JVM.
+  7. every other bool spec (rich trees, structured filters, and
+     flat specs rewritten to the same tree) compiles through ONE
+     compiler, ``_bool_tree_match_set``, whose predicates are all SQL
+     text: segments decode in an Arrow-batched kernel that emits
+     (query_id, doc_id, contrib) — doc lengths are co-located in the
+     posting (dls_bin), so scoring needs NO join to a 10^12-row docs
+     table — and one JVM hash-agg plus a CASE per query_id yield the
+     match set that bool top-k, aggregations, counts, sort and
+     collapse share.
 
 Tie-break doc_id ASC everywhere (mandatory for rank-identity).
 """
 
 from __future__ import annotations
 
+import datetime
 import logging
 import math
+import numbers
 from collections.abc import Iterable, Iterator
 
 import numpy as np
@@ -431,8 +437,9 @@ def _is_rich_bool(clauses: dict) -> bool:
     role values given as clause lists/dicts, bool-level
     minimum_should_match/boost, or filter clauses carrying nested
     bools / match options. Legacy flat specs (role → token string,
-    filter → string or list of simple single-key clauses) keep the
-    original one-agg path bit-for-bit."""
+    filter → string or list of simple single-key clauses) are what
+    the WAND executor may take (:func:`_is_flat_text_bool`); the tree
+    compiler rewrites them first (``QueryEngine._flat_bool_tree``)."""
     if ("minimum_should_match" in clauses or "boost" in clauses
             or "_name" in clauses):
         return True
@@ -851,9 +858,11 @@ class QueryEngine:
             parts.append(
                 df.withColumn("ord", F.lit(o)).withColumn("bsz", F.lit(bs))
             )
+        # dirs written before the per-block bound columns were dropped
+        # still carry them; nothing reads them
         out = parts[0]
         for part in parts[1:]:
-            out = out.unionByName(part)
+            out = out.unionByName(part, allowMissingColumns=True)
         return out
 
     # -- query -------------------------------------------------------------
@@ -1498,35 +1507,77 @@ class QueryEngine:
     _STRUCTURED_KINDS = ("term", "terms", "range", "exists", "match")
 
     @staticmethod
-    def _structured_pred(clause: dict) -> F.Column:
-        """One ES structured filter clause → a Column predicate over
-        the stored doc values: {"term": {col: v}}, {"terms": {col:
-        [v…]}}, {"range": {col: {gte/gt/lte/lt: v}}}, {"exists":
-        {"field": col}}. Values compare with the stored column's own
-        type (a string bound against a timestamp/date column coerces,
-        the ES format-driven behaviour)."""
-        (kind, spec), = clause.items()
+    def _sql_lit(v) -> str:
+        """A Python literal as Spark SQL text, typed like ``F.lit``
+        types it (L/D suffixes; repr round-trips doubles; a non-finite
+        double, which has no literal form, as a cast)."""
+        if v is None:
+            return "NULL"
+        if isinstance(v, bool):
+            return "true" if v else "false"
+        if isinstance(v, numbers.Integral):
+            return f"{int(v)}L"
+        if isinstance(v, numbers.Real):
+            v = float(v)
+            if math.isnan(v):
+                return "CAST('NaN' AS DOUBLE)"
+            if math.isinf(v):
+                return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
+            return f"{v!r}D"
+        if isinstance(v, str):
+            return _sql_str(v)
+        if isinstance(v, datetime.datetime):
+            return f"TIMESTAMP {_sql_str(v.isoformat(sep=' '))}"
+        if isinstance(v, datetime.date):
+            return f"DATE {_sql_str(v.isoformat())}"
+        raise ValueError(
+            f"unsupported filter value {v!r} ({type(v).__name__})"
+        )
+
+    @staticmethod
+    def _sql_ident(c) -> str:
+        return "`" + str(c).replace("`", "``") + "`"
+
+    @classmethod
+    def _leaf_pred_sql(cls, kind: str, spec: dict, ref, where: str) -> str | None:
+        """A term/terms/range/exists clause as SQL over the column
+        reference ``ref(name)``; None for any other kind. ``where``
+        prefixes the range errors."""
         if kind == "term":
             (c, v), = spec.items()
-            return F.col(c) == F.lit(v)
+            return f"({ref(c)} = {cls._sql_lit(v)})"
         if kind == "terms":
             (c, vs), = spec.items()
-            return F.col(c).isin(list(vs))
+            lits = [cls._sql_lit(v) for v in vs]
+            return f"({ref(c)} IN ({', '.join(lits)}))" if lits else "false"
         if kind == "range":
             (c, bounds), = spec.items()
-            ops = {"gte": "__ge__", "gt": "__gt__", "lte": "__le__", "lt": "__lt__"}
+            ops = {"gte": ">=", "gt": ">", "lte": "<=", "lt": "<"}
             bad = set(bounds) - set(ops)
             if bad:
-                raise ValueError(f"range on {c!r}: unknown bound(s) {sorted(bad)}")
-            pred = None
-            for b, v in bounds.items():
-                p = getattr(F.col(c), ops[b])(F.lit(v))
-                pred = p if pred is None else (pred & p)
-            if pred is None:
-                raise ValueError(f"range on {c!r}: no bounds given")
-            return pred
+                raise ValueError(
+                    f"{where}range on {c!r}: unknown bound(s) {sorted(bad)}"
+                )
+            if not bounds:
+                raise ValueError(f"{where}range on {c!r}: no bounds given")
+            return "(" + " AND ".join(
+                f"{ref(c)} {ops[b]} {cls._sql_lit(v)}"
+                for b, v in bounds.items()
+            ) + ")"
         if kind == "exists":
-            return F.col(spec["field"]).isNotNull()
+            return f"({ref(spec['field'])} IS NOT NULL)"
+        return None
+
+    @classmethod
+    def _structured_pred_sql(cls, clause: dict) -> str:
+        """One ES structured filter clause → a SQL predicate over the
+        stored doc values (``F.expr`` it where a Column is needed):
+        {"term": {col: v}}, {"terms": {col: [v…]}}, {"range": {col:
+        {gte/gt/lte/lt: v}}}, {"exists": {"field": col}}, {"nested":
+        {"path": p, "query": q}}. Values compare with the stored
+        column's own type (a string bound against a timestamp/date
+        column coerces, the ES format-driven behaviour)."""
+        (kind, spec), = clause.items()
         if kind == "nested":
             bad = set(spec) - {"path", "query"}
             if bad or not ({"path", "query"} <= set(spec)):
@@ -1534,95 +1585,37 @@ class QueryEngine:
                     f"nested takes path + query, got "
                     f"{sorted(bad) or sorted(spec)}"
                 )
-            pred = QueryEngine._nested_elem_pred(
-                str(spec["path"]), spec["query"]
-            )
+            path = str(spec["path"])
+            elem = cls._nested_elem_sql(path, spec["query"])
             # null / empty array → no element matches (ES: no nested
             # docs under the parent)
-            return F.coalesce(
-                F.exists(F.col(str(spec["path"])), pred), F.lit(False)
+            return f"coalesce(exists({cls._sql_ident(path)}, x -> {elem}), false)"
+        pred = cls._leaf_pred_sql(kind, spec, cls._sql_ident, "")
+        if pred is None:
+            raise ValueError(
+                f"unknown structured filter kind {kind!r}; expected one of "
+                f"{cls._STRUCTURED_KINDS}"
             )
-        raise ValueError(
-            f"unknown structured filter kind {kind!r}; expected one of "
-            f"{QueryEngine._STRUCTURED_KINDS}"
-        )
-
-    @staticmethod
-    def _sql_lit(v) -> str | None:
-        """A Python literal as Spark SQL text, typed exactly like
-        ``F.lit`` would type it (L/D suffixes; repr round-trips
-        doubles). None = not expressible, caller falls back to the
-        Column path."""
-        if isinstance(v, bool):
-            return "true" if v else "false"
-        if isinstance(v, int):
-            return f"{v}L"
-        if isinstance(v, float):
-            # non-finite floats have no SQL literal — Column fallback
-            return f"{float(v)!r}D" if math.isfinite(v) else None
-        if isinstance(v, str):
-            return _sql_str(v)
-        return None
-
-    @staticmethod
-    def _sql_ident(c) -> str:
-        return "`" + str(c).replace("`", "``") + "`"
+        return pred
 
     @classmethod
-    def _structured_pred_sql(cls, clause: dict) -> str | None:
-        """:meth:`_structured_pred` as SQL text when the clause is
-        text-expressible (term/terms/range/exists over plain
-        literals); None routes the caller to the Column path (nested
-        clauses, exotic values, validation errors). Semantics are
-        identical: the SQL parser builds the same comparison with the
-        same analyzer coercions as the Column DSL."""
-        (kind, spec), = clause.items()
-        if kind == "term":
-            (c, v), = spec.items()
-            lv = cls._sql_lit(v)
-            return None if lv is None else f"({cls._sql_ident(c)} = {lv})"
-        if kind == "terms":
-            (c, vs), = spec.items()
-            lits = [cls._sql_lit(v) for v in vs]
-            if not lits or any(lv is None for lv in lits):
-                return None
-            return f"({cls._sql_ident(c)} IN ({', '.join(lits)}))"
-        if kind == "range":
-            (c, bounds), = spec.items()
-            ops = {"gte": ">=", "gt": ">", "lte": "<=", "lt": "<"}
-            if not bounds or set(bounds) - set(ops):
-                return None
-            parts = []
-            for b, v in bounds.items():
-                lv = cls._sql_lit(v)
-                if lv is None:
-                    return None
-                parts.append(f"{cls._sql_ident(c)} {ops[b]} {lv}")
-            return "(" + " AND ".join(parts) + ")"
-        if kind == "exists":
-            return f"({cls._sql_ident(spec['field'])} IS NOT NULL)"
-        return None
-
-    @staticmethod
-    def _nested_elem_pred(path: str, spec: dict):
-        """Inner query of a ``nested`` clause → an element-level
-        predicate builder (Column → Column) for the higher-order
-        array functions. Field names accept the ES full path
+    def _nested_elem_sql(cls, path: str, spec) -> str:
+        """Inner query of a ``nested`` clause → a SQL predicate over
+        one array element, the lambda variable ``x`` of the caller's
+        higher-order function. Field names accept the ES full path
         (``path.sub``) or the bare sub-field; dotted sub-paths walk
-        nested structs. Kinds: term/terms/range/exists + bool trees
-        of those; text kinds raise (see :class:`_BoolNested`)."""
+        nested structs. Kinds: term/terms/range/exists + bool trees of
+        those; text kinds raise (see :class:`_BoolNested`)."""
         if not (isinstance(spec, dict) and len(spec) == 1):
             raise ValueError(
                 f"nested inner query must be a single-key dict, got {spec!r}"
             )
         strip = path + "."
 
-        def field_of(x, c):
-            c = c[len(strip):] if str(c).startswith(strip) else str(c)
-            out = x
-            for part in c.split("."):
-                out = out[part]
-            return out
+        def ref(c) -> str:
+            c = str(c)
+            c = c[len(strip):] if c.startswith(strip) else c
+            return "x." + ".".join(cls._sql_ident(p) for p in c.split("."))
 
         (kind, s), = spec.items()
         if kind == "bool":
@@ -1633,7 +1626,7 @@ class QueryEngine:
                     f"nested inner bool: unknown key(s) {sorted(bad)}"
                 )
             roles = {
-                r: [QueryEngine._nested_elem_pred(path, c)
+                r: [f"coalesce({cls._nested_elem_sql(path, c)}, false)"
                     for c in (s.get(r) if isinstance(s.get(r), (list, tuple))
                               else [s[r]] if s.get(r) is not None else [])]
                 for r in ("must", "should", "must_not", "filter")
@@ -1645,58 +1638,20 @@ class QueryEngine:
                     if msm is not None and roles["should"]
                     else (0 if (roles["must"] or roles["filter"])
                           else (1 if roles["should"] else 0)))
-
-            def node(x):
-                out = None
-                for p in roles["must"] + roles["filter"]:
-                    q = F.coalesce(p(x), F.lit(False))
-                    out = q if out is None else (out & q)
-                for p in roles["must_not"]:
-                    q = ~F.coalesce(p(x), F.lit(False))
-                    out = q if out is None else (out & q)
-                if need > 0:
-                    cnt = None
-                    for p in roles["should"]:
-                        q = F.coalesce(p(x), F.lit(False)).cast("int")
-                        cnt = q if cnt is None else (cnt + q)
-                    q = cnt >= need
-                    out = q if out is None else (out & q)
-                return out
-
-            return node
-        if kind == "term":
-            (c, v), = s.items()
-            return lambda x: field_of(x, c) == F.lit(v)
-        if kind == "terms":
-            (c, vs), = s.items()
-            return lambda x: field_of(x, c).isin(list(vs))
-        if kind == "range":
-            (c, bounds), = s.items()
-            ops = {"gte": "__ge__", "gt": "__gt__",
-                   "lte": "__le__", "lt": "__lt__"}
-            bad = set(bounds) - set(ops)
-            if bad or not bounds:
-                raise ValueError(
-                    f"nested range on {c!r}: "
-                    f"{'unknown bound(s) ' + str(sorted(bad)) if bad else 'no bounds'}"
-                )
-            items = sorted(bounds.items())
-
-            def rng(x):
-                pred = None
-                for b, v in items:
-                    p = getattr(field_of(x, c), ops[b])(F.lit(v))
-                    pred = p if pred is None else (pred & p)
-                return pred
-
-            return rng
-        if kind == "exists":
-            return lambda x: field_of(x, s["field"]).isNotNull()
-        raise ValueError(
-            f"nested inner queries support term/terms/range/exists/bool "
-            f"(the reference's nested sub-properties are unanalyzed — "
-            f"mapping.json:5-9), got {kind!r}"
-        )
+            parts = roles["must"] + roles["filter"]
+            parts += [f"(NOT {p})" for p in roles["must_not"]]
+            if need > 0:
+                cnt = " + ".join(f"cast({p} as int)" for p in roles["should"])
+                parts.append(f"(({cnt}) >= {need})")
+            return "(" + " AND ".join(parts) + ")" if parts else "true"
+        pred = cls._leaf_pred_sql(kind, s, ref, "nested ")
+        if pred is None:
+            raise ValueError(
+                f"nested inner queries support term/terms/range/exists/bool "
+                f"(the reference's nested sub-properties are unanalyzed — "
+                f"mapping.json:5-9), got {kind!r}"
+            )
+        return pred
 
     def bool_topk(
         self,
@@ -1757,21 +1712,20 @@ class QueryEngine:
         volume — with must/filter terms as required cursors, must_not
         terms as excluded cursors and should terms as optional ones;
         scores are then the pinned term-lexicographic sum. Any other
-        batch takes the hash-aggregate path below.
+        batch takes the hash-aggregate path: the one bool compiler,
+        :meth:`_bool_tree_match_set`, with each flat spec first
+        rewritten to the equivalent tree (every token one clause; a
+        filter ``{"match": text}`` an ``operator: and`` clause). One
+        postings scan covers every clause of every query, non-scoring
+        clauses priced at idf 0; one JVM hash-agg on (query_id,
+        doc_id) yields per-clause matched counts and sums, and each
+        tree evaluates as SQL over them. A must/filter token absent
+        from the whole corpus matches nothing (ES semantics). Scale
+        shape: literal (or broadcast) query table, term+group-pruned
+        scans, one shuffle on (query_id, doc_id), WindowGroupLimit
+        top-k.
 
-        Hash-aggregate path — one postings scan covers all roles: the
-        broadcast query table carries (query_id, term, idf, role) with
-        idf pinned to 0 for
-        non-scoring roles, so the ordinary decode kernel prices every
-        row and the role aggregation is one JVM hash-agg —
-        score = Σ contrib (non-scoring roles add 0.0),
-        must/filter satisfied by distinct-term counts against the
-        clause counts, exclusion by a max() flag. A must/filter token
-        absent from the whole corpus matches nothing (ES semantics).
-        Scale shape: broadcast query table, term+group-pruned scans,
-        one shuffle on (query_id, doc_id), WindowGroupLimit top-k.
-
-        RICH specs (detected per batch — see :func:`_is_rich_bool`)
+        RICH specs (see :func:`_is_rich_bool`)
         extend the clause model to real ES body shapes: role values as
         CLAUSE LISTS whose elements are ``{"match": text | {"query":
         ..., "field": f, "boost": b, "operator": "and"|"or"}}``
@@ -1804,10 +1758,7 @@ class QueryEngine:
                 search_after, "bool_topk",
             )
         logger.debug("bool_topk: %d queries on the hash-agg path", len(queries))
-        if any(_is_rich_bool(c) for _, c in queries):
-            hits = self._bool_tree_match_set(queries, field=field, docs=docs)
-        else:
-            hits = self._bool_match_set(queries, field=field, docs=docs)
+        hits = self._bool_tree_match_set(queries, field=field, docs=docs)
         if hits is None:
             out = local_rows_df(self.spark, [], schema=TOPK_SCHEMA)
             if track_total_hits:
@@ -1847,9 +1798,9 @@ class QueryEngine:
         ordinary BM25 sum of the matched terms (the ES bool-should
         scoring).
 
-        Scale shape: the SAME one-scan/one-hash-agg core as
-        :meth:`bool_topk` (every term a should clause — the matched
-        count rides the same agg row as the score), then ONE
+        Scale shape: one postings scan and one (query_id, doc_id)
+        hash-agg (every term a should clause — the matched count
+        rides the same agg row as the score), then ONE
         column-pruned doc-values join compares the count against the
         doc's own threshold. Thresholds clamp to ≥1 — a zero/negative
         threshold would be ES match_all (an unbounded corpus scan;
@@ -1879,13 +1830,27 @@ class QueryEngine:
                 rows.append((int(qid), self._term_of(t, fld)))
         meta = self._term_meta(sorted({t for _, t in rows}))
         present = [
-            (qid, t, _idf(self.n_docs, meta[t]["df"]), avg, "should")
+            (qid, t, _idf(self.n_docs, meta[t]["df"]), avg)
             for qid, t in rows
             if t in meta and meta[t]["df"] > 0
         ]
         if not present:
             return local_rows_df(self.spark, [], schema=TOPK_SCHEMA)
-        agg = self._bool_agg(present, meta)
+        # (query_id, term, doc_id) rows are unique (the decode kernel
+        # dead-masks superseded versions), so the row count is the
+        # matched-term count
+        agg = (
+            self._attach_query_terms(self._pruned_postings(meta), present)
+            .mapInPandas(
+                _score_segments(self.cfg.k1, self.cfg.b, self._dead_by_ord),
+                schema=CONTRIB_SCHEMA,
+            )
+            .groupBy("query_id", "doc_id")
+            .agg(
+                F.sum("contrib").alias("score"),
+                F.count("*").alias("should_m"),
+            )
+        )
         cols = sorted(set(msm_of.values()))
         dv = (docs.select("doc_id", *cols) if docs is not None
               else self._doc_values(cols))
@@ -1928,10 +1893,7 @@ class QueryEngine:
         specs — see :meth:`_bool_tree_match_set`)."""
         metrics = metrics or {}
         self._check_metrics(metrics)
-        if any(_is_rich_bool(c) for _, c in queries):
-            hits = self._bool_tree_match_set(queries, field=field, docs=docs)
-        else:
-            hits = self._bool_match_set(queries, field=field, docs=docs)
+        hits = self._bool_tree_match_set(queries, field=field, docs=docs)
         if hits is None:
             hits = local_rows_df(self.spark, 
                 [], schema="query_id long, doc_id long, score double"
@@ -2011,7 +1973,7 @@ class QueryEngine:
                 if "match" in cl:
                     ftext_parts.append(cl["match"])
                 else:
-                    self._structured_pred(cl)  # validate kind/bounds
+                    self._structured_pred_sql(cl)  # validate kind/bounds
                     sclauses.append(cl)
             ftext = " ".join(ftext_parts)
         else:
@@ -2024,7 +1986,7 @@ class QueryEngine:
         # a token may appear in several POSITIVE roles at once
         # (ES: must+should double-scores it, must+filter scores it
         # once and requires it twice over — both reproduced by the
-        # per-role fan-out in _bool_agg and by the WAND cursor weight);
+        # per-clause sum in the tree compiler and by the WAND cursor weight);
         # only must_not beside a positive role is contradictory
         contradictory = set(toks["must_not"]) & (
             set(toks["must"]) | set(toks["should"]) | set(toks["filter"])
@@ -2083,139 +2045,39 @@ class QueryEngine:
             roles[qid] = (term_roles, 0)
         return meta, present, roles
 
-    def _bool_match_set(
-        self,
-        queries: list[tuple[int, dict]],
-        field: str | None = None,
-        docs: DataFrame | None = None,
-    ) -> DataFrame | None:
-        """Full bool match set (query_id, doc_id, score) — the shared
-        front half of :meth:`bool_topk` (top-k page) and
-        :meth:`bool_aggs` (filtered aggregations). None when nothing
-        can match."""
-        fld = self._resolve_field(field)
-        avg = self._avgdl_of(fld)
-        rows: list[tuple[int, str, str]] = []  # (qid, stored term, role)
-        need: list[tuple[int, int, int, int]] = []
-        struct: dict[int, list[dict]] = {}   # qid → structured clauses
-        match_all: list[int] = []            # structured-only (no text clauses)
-        has_mnot: set[int] = set()
-        for qid, clauses in queries:
-            toks, sclauses = self._flat_bool_tokens(qid, clauses)
-            if sclauses:
-                struct[qid] = sclauses
-            for r in self._BOOL_ROLES:
-                for t in toks[r]:
-                    rows.append((qid, self._term_of(t, fld), r))
-            if toks["must_not"]:
-                has_mnot.add(qid)
-            has_text = bool(toks["must"] or toks["should"] or toks["filter"])
-            if not has_text and qid in struct:
-                match_all.append(qid)   # ES match_all + filter, score 0
-            msm = 0 if (toks["must"] or toks["filter"]) else (
-                1 if toks["should"] else 0
-            )
-            need.append((qid, len(toks["must"]), len(toks["filter"]), msm))
-        if not rows and not struct:
+    def _flat_bool_tree(self, qid: int, clauses: dict) -> dict | None:
+        """A legacy flat bool spec → the equivalent tree spec for
+        :meth:`_bool_tree_match_set`, validated by
+        :meth:`_flat_bool_tokens` first (its errors stand). Role token
+        strings carry over unchanged (the tree compiles one
+        single-token clause per token); a filter list's
+        ``{"match": text}`` keeps its all-tokens-required meaning as
+        an ``operator: and`` match; structured filters pass through.
+        Should tokens beside no must/filter token need one match, even
+        next to structured filters. None when the spec holds no token
+        and no structured clause: it matches nothing."""
+        toks, sclauses = self._flat_bool_tokens(qid, clauses)
+        if not (any(toks.values()) or sclauses):
             return None
-        meta = self._term_meta(sorted({t for _, t, _ in rows})) if rows else {}
-        present = [
-            (
-                qid,
-                t,
-                _idf(self.n_docs, meta[t]["df"])
-                if role in ("must", "should")
-                else 0.0,
-                avg,
-                role,
-            )
-            for qid, t, role in rows
-            if t in meta and meta[t]["df"] > 0
-        ]
-        if not present and not struct:
-            return None
-        agg = None if not present else self._bool_agg(present, meta)
-        return self._bool_hits(agg, need, struct, match_all, has_mnot, docs)
-
-    def _bool_agg(self, present: list[tuple], meta: dict) -> DataFrame:
-        """The one-scan/one-hash-agg core of :meth:`bool_topk`:
-        per (query_id, doc_id) — summed scoring contribs, per-role
-        distinct-term counts, must_not exclusion flag.
-
-        The SCAN table is one row per (query_id, term) — idf is the
-        scoring idf when ANY of the token's roles score, else 0 — so
-        a dual-role token is decoded once; the ROLE table keeps one
-        row per (query_id, term, role), and the post-scan join fans
-        each contribution out per role (a must+should token therefore
-        scores twice, the ES sum-of-clauses behaviour)."""
-        scan: dict[tuple[int, str], tuple[float, float]] = {}
-        role_rows: list[tuple[int, str, str]] = []
-        for qid, t, idf, avg, role in present:
-            cur = scan.get((qid, t))
-            scan[(qid, t)] = (max(idf, cur[0]) if cur else idf, avg)
-            role_rows.append((qid, t, role))
-        matched = self._attach_query_terms(
-            self._pruned_postings(meta),
-            [(q, t, i, a) for (q, t), (i, a) in scan.items()],
-        )
-        contribs = matched.mapInPandas(
-            _score_segments(self.cfg.k1, self.cfg.b, self._dead_by_ord),
-            schema=CONTRIB_SCHEMA,
-        )
-        # per-role fan-out: (query_id, term) → [role…] is driver-known
-        # and tiny — one literal map expression, no broadcast join
-        # (same inner semantics; a token in several roles fans out to
-        # one row per role, exactly like the join it replaces)
-        if len(role_rows) > self._LITERAL_ATTACH_MAX:
-            roles = local_rows_df(
-                self.spark, role_rows,
-                schema="query_id long, term string, role string",
-            )
-            fanned = contribs.join(F.broadcast(roles), ["query_id", "term"])
-        else:
-            by_key: dict[tuple[int, str], list[str]] = {}
-            for q, t, role in role_rows:
-                by_key.setdefault((q, t), []).append(role)
-            entries = [
-                f"{_sql_str(f'{q}|{t}')}, "
-                f"array({', '.join(_sql_str(r) for r in rs)})"
-                for (q, t), rs in by_key.items()
+        tree = {
+            r: clauses[r] for r in ("must", "should", "must_not")
+            if clauses.get(r)
+        }
+        fval = clauses.get("filter")
+        if isinstance(fval, (list, tuple)):
+            tree["filter"] = [
+                cl if "match" not in cl
+                else {"match": {"query": cl["match"], "operator": "and"}}
+                for cl in fval
+                if "match" not in cl or self._tokenize(cl["match"])
             ]
-            lookup = (
-                f"element_at(map({', '.join(entries)}), "
-                f"concat(cast(query_id as string), '|', term))"
-            )
-            fanned = contribs.withColumn("role", F.expr(f"explode({lookup})"))
-        return (
-            fanned
-            .groupBy("query_id", "doc_id")
-            .agg(
-                F.sum(
-                    F.when(
-                        F.col("role").isin("must", "should"), F.col("contrib")
-                    ).otherwise(F.lit(0.0))
-                ).alias("score"),
-                # (query_id, term, doc_id) rows are UNIQUE here — the
-                # decode kernel dead-masks superseded versions, so each
-                # live (term, doc) pair comes from exactly one dir (the
-                # same invariant the score sum relies on). Conditional
-                # counts therefore equal count-distinct, without the
-                # Expand + extra shuffle Spark plans for multi-distinct
-                # aggregates (plan-asserted: ≤2 hash exchanges total).
-                F.sum(
-                    F.when(F.col("role") == "must", 1).otherwise(0)
-                ).alias("must_m"),
-                F.sum(
-                    F.when(F.col("role") == "filter", 1).otherwise(0)
-                ).alias("filter_m"),
-                F.sum(
-                    F.when(F.col("role") == "should", 1).otherwise(0)
-                ).alias("should_m"),
-                F.max(
-                    F.when(F.col("role") == "must_not", 1).otherwise(0)
-                ).alias("excl"),
-            )
-        )
+        elif fval:
+            tree["filter"] = fval
+        if toks["should"] and not (toks["must"] or toks["filter"]):
+            # flat specs count only text clauses here: beside nothing
+            # but structured filters, one should token stays required
+            tree["minimum_should_match"] = 1
+        return tree
 
     @staticmethod
     def _clause_col(clause: dict) -> str:
@@ -2226,104 +2088,6 @@ class QueryEngine:
             return spec["path"]
         (c, _), = spec.items()
         return c
-
-    def _bool_hits(
-        self,
-        agg: DataFrame | None,
-        need: list[tuple[int, int, int, int]],
-        struct: dict[int, list[dict]],
-        match_all: list[int],
-        has_mnot: set[int],
-        docs: DataFrame | None,
-    ) -> DataFrame | None:
-        """Assemble the (query_id, doc_id, score) bool match set from
-        the text-clause agg and the structured filter context.
-
-        Text-bounded queries flow through the occurrence-count filter
-        as before; queries with structured clauses additionally join
-        the pre-filtered doc-values projection (the OR of every
-        query's predicate is pushed into the scan, the per-query
-        predicate is an exact CASE after the join). match_all+filter
-        queries take their candidates straight from that projection
-        with score 0, minus any must_not matches from the agg."""
-        text_hits = None
-        if agg is not None:
-            need_df = local_rows_df(self.spark, 
-                need, schema="query_id long, n_must int, n_filter int, msm int"
-            )
-            text_hits = (
-                agg.join(F.broadcast(need_df), "query_id")
-                .filter(
-                    (F.col("must_m") == F.col("n_must"))
-                    & (F.col("filter_m") == F.col("n_filter"))
-                    & (F.col("excl") == 0)
-                    & (F.col("should_m") >= F.col("msm"))
-                )
-                .select("query_id", "doc_id", "score")
-            )
-            if match_all:
-                # structured-only queries never rank via the agg (their
-                # agg rows, if any, are pure must_not matches)
-                text_hits = text_hits.filter(~F.col("query_id").isin(match_all))
-        if not struct:
-            return text_hits
-        cols = sorted(
-            {self._clause_col(cl) for cls in struct.values() for cl in cls}
-        )
-        dv = (
-            docs.select("doc_id", *cols)
-            if docs is not None
-            else self._doc_values(cols)
-        )
-        preds: dict[int, F.Column] = {}
-        for qid, cls in struct.items():
-            p = None
-            for cl in cls:
-                q = self._structured_pred(cl)
-                p = q if p is None else (p & q)
-            preds[qid] = p
-        any_pred = None
-        for p in preds.values():
-            any_pred = p if any_pred is None else (any_pred | p)
-        # pushed parquet filter: only docs satisfying SOME query's
-        # predicate ever leave the scan
-        dvf = dv.filter(any_pred)
-        case = None
-        for qid, p in preds.items():
-            case = (
-                F.when(F.col("query_id") == qid, p)
-                if case is None
-                else case.when(F.col("query_id") == qid, p)
-            )
-        parts: list[DataFrame] = []
-        if text_hits is not None:
-            sqids = sorted(q for q in struct if q not in match_all)
-            parts.append(text_hits.filter(~F.col("query_id").isin(sorted(struct))))
-            if sqids:
-                parts.append(
-                    text_hits.filter(F.col("query_id").isin(sqids))
-                    .join(dvf, "doc_id")
-                    .filter(case.otherwise(F.lit(False)))
-                    .select("query_id", "doc_id", "score")
-                )
-        for qid in match_all:
-            base = dvf.filter(preds[qid]).select(
-                F.lit(qid).cast("long").alias("query_id"),
-                "doc_id",
-                F.lit(0.0).alias("score"),
-            )
-            if qid in has_mnot and agg is not None:
-                excluded = agg.filter(
-                    (F.col("query_id") == qid) & (F.col("excl") == 1)
-                ).select("doc_id")
-                base = base.join(excluded, "doc_id", "left_anti")
-            parts.append(base)
-        if not parts:
-            return None
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
 
     # -- nested bool trees (rich spec) ---------------------------------------
 
@@ -2351,12 +2115,11 @@ class QueryEngine:
             children = []
             if isinstance(v, str):
                 # legacy token string: one single-token clause per
-                # distinct token (every token required/excluded —
-                # identical match set to the flat path)
+                # distinct token (every token required/excluded),
+                # analyzed once
                 for t in sorted(set(self._tokenize(v))):
-                    children.append(self._compile_bool_clause(
-                        {"match": t}, child_scoring, default_field,
-                        leaves, structs,
+                    children.append(self._match_leaf(
+                        [t], {}, child_scoring, default_field, leaves
                     ))
             else:
                 for cl in (v if isinstance(v, (list, tuple)) else [v]):
@@ -2371,6 +2134,25 @@ class QueryEngine:
                 "an unbounded corpus scan)"
             )
         return node
+
+    def _match_leaf(
+        self, toks: list[str], opts: dict, scoring: bool,
+        default_field: str | None, leaves: list,
+    ) -> _BoolLeaf:
+        """A text match clause over analyzed tokens → a leaf with the
+        next clause id (``opts``: field/boost/operator/_name)."""
+        fld = self._resolve_field(opts.get("field", default_field))
+        leaf = _BoolLeaf(
+            cid=len(leaves),
+            terms=[self._term_of(t, fld) for t in toks],
+            op_and=str(opts.get("operator", "or")).lower() == "and",
+            boost=float(opts.get("boost", 1.0)),
+            scoring=scoring,
+            field=fld,
+            name=opts.get("_name"),
+        )
+        leaves.append(leaf)
+        return leaf
 
     def _compile_bool_clause(
         self, cl, scoring: bool, default_field: str | None,
@@ -2394,21 +2176,10 @@ class QueryEngine:
                     f"match clause supports query/field/boost/operator/"
                     f"_name, got {sorted(bad) or 'no query'}"
                 )
-            fld = self._resolve_field(opts.get("field", default_field))
             toks = sorted(set(self._tokenize(opts["query"])))
             if not toks:
                 raise ValueError("empty match clause")
-            leaf = _BoolLeaf(
-                cid=len(leaves),
-                terms=[self._term_of(t, fld) for t in toks],
-                op_and=str(opts.get("operator", "or")).lower() == "and",
-                boost=float(opts.get("boost", 1.0)),
-                scoring=scoring,
-                field=fld,
-                name=opts.get("_name"),
-            )
-            leaves.append(leaf)
-            return leaf
+            return self._match_leaf(toks, opts, scoring, default_field, leaves)
         if kind == "match_phrase":
             opts = dict(spec) if isinstance(spec, dict) else {"query": spec}
             bad = set(opts) - {"query", "field", "boost", "slop", "_name"}
@@ -2432,7 +2203,7 @@ class QueryEngine:
             leaves.append(leaf)
             return leaf
         if kind in ("term", "terms", "range", "exists"):
-            self._structured_pred(cl)  # validate kind/bounds
+            self._structured_pred_sql(cl)  # validate kind/bounds
             s = _BoolStruct(cl)
             structs.append(s)
             return s
@@ -2452,7 +2223,7 @@ class QueryEngine:
                 )
             path = str(spec["path"])
             # validate the inner query compiles (raises on text kinds)
-            self._nested_elem_pred(path, spec["query"])
+            self._nested_elem_sql(path, spec["query"])
             nn = _BoolNested(
                 path=path, inner=spec["query"], score_mode=mode,
                 boost=float(spec.get("boost", 1.0)), scoring=scoring,
@@ -2612,47 +2383,17 @@ class QueryEngine:
             return forced < need
         return False
 
-    def _bool_tree_cols(self, node: _BoolNode) -> tuple:
-        """(matched, score, names) expressions for one query's tree
+    def _bool_tree_cols(self, node: _BoolNode) -> tuple[str, str, list]:
+        """(matched, score, names) SQL expressions for one query's tree
         over the per-clause aggregation columns ``_c<cid>`` (distinct
         matched-term count) and ``_s<cid>`` (boosted contribution sum)
         plus the joined doc-value columns for structured predicates.
         Score = Σ over matched must/should children of the child's
         score (ES sum-of-clauses; a nested bool contributes its own
-        sum × its boost), evaluated as a pure JVM expression.
-
-        Expressions are composed as SQL TEXT wherever possible (one
-        F.expr parse instead of hundreds of py4j round trips — the
-        Column DSL costs one JVM call per operator and dominated
-        driver time on rich trees); a clause only the Column DSL can
-        express (nested element predicates, exotic literals) flips
-        that subtree to Columns via the same hybrid combinators, so
-        semantics are identical either way. Callers accept
-        str | Column for all three slots."""
-        def C(x):
-            return F.expr(x) if isinstance(x, str) else x
-
-        def AND(a, b):
-            if a is None:
-                return b
-            if isinstance(a, str) and isinstance(b, str):
-                return f"({a} AND {b})"
-            return C(a) & C(b)
-
-        def NOT(a):
-            return f"(NOT {a})" if isinstance(a, str) else ~a
-
-        def ADD(a, b):
-            if isinstance(a, str) and isinstance(b, str):
-                return f"({a} + {b})"
-            return C(a) + C(b)
-
-        def IF(c, t, e):
-            if all(isinstance(x, str) for x in (c, t, e)):
-                return f"if({c}, {t}, {e})"
-            return F.when(C(c), C(t)).otherwise(C(e))
-
-        def matched(ch):
+        sum × its boost), evaluated as a pure JVM expression. Every
+        piece is SQL text, parsed once per query_id CASE (the Column
+        DSL costs one py4j call per operator)."""
+        def matched(ch) -> str:
             if isinstance(ch, _BoolNode):
                 return matched_node(ch)
             if isinstance(ch, (_BoolLeaf, _BoolPhrase)):
@@ -2662,12 +2403,9 @@ class QueryEngine:
                     else 1
                 )
                 return f"(coalesce(_c{ch.cid}, 0) >= {need})"
-            sql = self._structured_pred_sql(ch.clause)
-            if sql is not None:
-                return f"coalesce({sql}, false)"
-            return F.coalesce(self._structured_pred(ch.clause), F.lit(False))
+            return f"coalesce({self._structured_pred_sql(ch.clause)}, false)"
 
-        def score(ch):
+        def score(ch) -> str:
             if isinstance(ch, _BoolNode):
                 return score_node(ch)
             if isinstance(ch, (_BoolLeaf, _BoolPhrase)) and ch.scoring:
@@ -2678,17 +2416,13 @@ class QueryEngine:
                 # constant itself; none → 0. Gated by matched() in
                 # the caller, so the count is ≥ 1 when evaluated.
                 if ch.score_mode == "none":
-                    return F.lit(0.0)
+                    return "0.0D"
                 if ch.score_mode == "sum":
-                    n = F.coalesce(
-                        F.size(F.filter(
-                            F.col(ch.path),
-                            self._nested_elem_pred(ch.path, ch.inner),
-                        )),
-                        F.lit(0),
-                    )
-                    return n.cast("double") * F.lit(ch.boost)
-                return F.lit(ch.boost)
+                    elem = self._nested_elem_sql(ch.path, ch.inner)
+                    n = (f"coalesce(size(filter({self._sql_ident(ch.path)}, "
+                         f"x -> {elem})), 0)")
+                    return f"(cast({n} as double) * {float(ch.boost)!r}D)"
+                return f"{float(ch.boost)!r}D"
             if isinstance(ch, _BoolRankFeature) and ch.scoring:
                 x = f"cast({self._sql_ident(ch.column)} as double)"
                 if ch.fn == "saturation":
@@ -2705,63 +2439,30 @@ class QueryEngine:
                 return f"coalesce(({v} * {float(ch.boost)!r}D), 0.0D)"
             return "0.0D"
 
-        def matched_node(n: _BoolNode):
-            out = None
-            for c in n.must + n.filter:
-                out = AND(out, matched(c))
-            for c in n.must_not:
-                out = AND(out, NOT(matched(c)))
+        def gated(ch) -> str:
+            return f"if({matched(ch)}, {score(ch)}, 0.0D)"
+
+        def matched_node(n: _BoolNode) -> str:
+            parts = [matched(c) for c in n.must + n.filter]
+            parts += [f"(NOT {matched(c)})" for c in n.must_not]
             need = n.need_should()
             if need > 0:
-                cnt = None
-                for c in n.should:
-                    m = matched(c)
-                    x = (
-                        f"cast({m} as int)"
-                        if isinstance(m, str)
-                        else m.cast("int")
-                    )
-                    cnt = x if cnt is None else ADD(cnt, x)
-                p = (
-                    f"({cnt} >= {need})"
-                    if isinstance(cnt, str)
-                    else (cnt >= need)
-                )
-                out = AND(out, p)
-            return out if out is not None else "true"
+                cnt = " + ".join(f"cast({matched(c)} as int)" for c in n.should)
+                parts.append(f"(({cnt}) >= {need})")
+            return "(" + " AND ".join(parts) + ")" if parts else "true"
 
-        def score_node(n: _BoolNode):
+        def score_node(n: _BoolNode) -> str:
             if n.kind == "dis_max":
                 # ES dis_max: max matching clause + tie_breaker·Σrest
-                per = [IF(matched(c), score(c), "0.0D") for c in n.should]
-                total = per[0]
-                for p in per[1:]:
-                    total = ADD(total, p)
-                if len(per) > 1:
-                    mx = (
-                        f"greatest({', '.join(per)})"
-                        if all(isinstance(p, str) for p in per)
-                        else F.greatest(*[C(p) for p in per])
-                    )
-                else:
-                    mx = per[0]
+                per = [gated(c) for c in n.should]
+                s = f"greatest({', '.join(per)})" if len(per) > 1 else per[0]
                 if n.tie_breaker:
-                    tb = float(n.tie_breaker)
-                    if isinstance(mx, str) and isinstance(total, str):
-                        s = f"({mx} + {tb!r}D * ({total} - {mx}))"
-                    else:
-                        s = C(mx) + F.lit(tb) * (C(total) - C(mx))
-                else:
-                    s = mx
+                    total = "(" + " + ".join(per) + ")"
+                    s = f"({s} + {float(n.tie_breaker)!r}D * ({total} - {s}))"
             elif n.kind == "boosting":
-                pos = n.must[0]
-                s = IF(matched(pos), score(pos), "0.0D")
+                s = gated(n.must[0])
                 neg = matched(n.negative[0])
-                nb = float(n.negative_boost)
-                if isinstance(neg, str) and isinstance(s, str):
-                    s = f"if({neg}, ({s} * {nb!r}D), {s})"
-                else:
-                    s = F.when(C(neg), C(s) * F.lit(nb)).otherwise(C(s))
+                s = f"if({neg}, ({s} * {float(n.negative_boost)!r}D), {s})"
             elif n.kind == "constant_score":
                 # matched gating happens in the caller's CASE; the
                 # node's own contribution is the constant (0 when the
@@ -2770,15 +2471,14 @@ class QueryEngine:
             else:
                 s = "0.0D"
                 for c in n.must + n.should:
-                    s = ADD(s, IF(matched(c), score(c), "0.0D"))
+                    s = f"({s} + {gated(c)})"
             if n.boost != 1.0:
-                b = float(n.boost)
-                s = f"({s} * {b!r}D)" if isinstance(s, str) else s * F.lit(b)
+                s = f"({s} * {float(n.boost)!r}D)"
             return s
 
-        def names_of(n: _BoolNode) -> list:
-            """(name, matched str|Column) per named element, ES named
-            queries — DFS order; callers pin lexicographic order."""
+        def names_of(n: _BoolNode) -> list[tuple[str, str]]:
+            """(name, matched) per named element, ES named queries —
+            DFS order; callers pin lexicographic order."""
             out: list = []
 
             def visit(el):
@@ -2852,11 +2552,16 @@ class QueryEngine:
         field: str | None = None,
         docs: DataFrame | None = None,
     ) -> DataFrame | None:
-        """Full (query_id, doc_id, score) match set for RICH bool specs
-        — nested bool sub-clauses, per-clause boost/field/operator and
+        """Full (query_id, doc_id, score) match set of bool specs, or
+        None when nothing can match — the one bool compiler behind
+        every hash-aggregate surface (:meth:`bool_topk`, aggregations,
+        counts, sort, collapse, rescore, function_score). Rich specs —
+        nested bool sub-clauses, per-clause boost/field/operator and
         bool-level minimum_should_match (the shapes real ES bodies
         nest; reference users query the index ElasticIndexer.js:76
-        builds with exactly these bodies).
+        builds with exactly these bodies) — compile as they are;
+        legacy flat specs first become the equivalent tree
+        (:meth:`_flat_bool_tree`).
 
         Scale shape — still ONE postings scan for the whole batch:
         every text leaf of every tree contributes (query_id, term)
@@ -2867,8 +2572,9 @@ class QueryEngine:
         conditional aggregates (no shuffle per clause, no extra pass
         per nesting level). The tree itself evaluates as a pure JVM
         CASE expression over those columns — arbitrary nesting depth
-        costs zero additional shuffles. Structured clauses join the
-        OR-pushed doc-values projection exactly like the flat path;
+        costs zero additional shuffles. Structured clauses (SQL text,
+        :meth:`_structured_pred_sql`) join the doc-values projection,
+        whose scan is pushed the OR of every query's predicates;
         structured-only-matchable queries union their candidates from
         that pushed scan. A tree that can match with NO evidence
         (must_not-only, msm=0 should-only) is rejected as an unbounded
@@ -2876,16 +2582,19 @@ class QueryEngine:
 
         Scores: clause sums use engine-ordered float addition — ranks
         agree with a flat re-sum except on knife-edge float ties."""
-        fld_default = field if field is not None else None
         leaves: list[_BoolLeaf] = []
         structs_all: list[_BoolStruct] = []
         trees: dict[int, _BoolNode] = {}
         q_leaves: dict[int, list[_BoolLeaf]] = {}
         q_structs: dict[int, list[_BoolStruct]] = {}
         for qid, clauses in queries:
+            if not _is_rich_bool(clauses):
+                clauses = self._flat_bool_tree(qid, clauses)
+                if clauses is None:
+                    continue
             n0, s0 = len(leaves), len(structs_all)
             trees[qid] = self._compile_bool_node(
-                clauses, True, fld_default, leaves, structs_all
+                clauses, True, field, leaves, structs_all
             )
             q_leaves[qid] = leaves[n0:]
             q_structs[qid] = structs_all[s0:]
@@ -2896,7 +2605,6 @@ class QueryEngine:
                     "add a required/scoring clause"
                 )
         # ---- text side: one scan, one per-clause conditional agg ----
-        term_leaves = [lf for lf in leaves if isinstance(lf, _BoolLeaf)]
         phrase_leaves = [lf for lf in leaves if isinstance(lf, _BoolPhrase)]
         if phrase_leaves:
             self._require_positions("match_phrase in a bool tree")
@@ -2982,22 +2690,18 @@ class QueryEngine:
                 if docs is not None
                 else self._doc_values(cols)
             )
-            any_pred = None
-            q_any: dict[int, F.Column] = {}
-            for qid, ss in q_structs.items():
-                p = None
-                for s in ss:
-                    q = self._structured_pred(s.clause)
-                    p = q if p is None else (p | q)
-                if p is not None:
-                    q_any[qid] = p
-                    any_pred = p if any_pred is None else (any_pred | p)
-            dvf = dv.filter(any_pred)
+            q_any = {
+                qid: "(" + " OR ".join(
+                    self._structured_pred_sql(s.clause) for s in ss
+                ) + ")"
+                for qid, ss in q_structs.items() if ss
+            }
+            dvf = dv.filter(F.expr(" OR ".join(q_any.values())))
             dparts = []
             for qid, tree in trees.items():
                 if qid in q_any and self._struct_only_sat(tree):
                     dparts.append(
-                        dvf.filter(q_any[qid]).select(
+                        dvf.filter(F.expr(q_any[qid])).select(
                             F.lit(qid).cast("long").alias("query_id"), "doc_id"
                         )
                     )
@@ -3015,50 +2719,29 @@ class QueryEngine:
             return None
         if dvf is not None:
             cands = cands.join(dvf, "doc_id", "left")
-        per_query: list[tuple[int, object, object, object]] = []
+        per_query: list[tuple[int, str, str, str]] = []
         any_names = False
         for qid, tree in trees.items():
             m, s, names = self._bool_tree_cols(tree)
             # ES named queries: the names of matched _name clauses,
             # pinned lexicographic order (per-clause matched columns
             # come free from the same hash-agg — no extra pass)
+            mq = "cast(array() as array<string>)"
             if names:
                 any_names = True
-                snames = sorted(names, key=lambda x: x[0])
-                if all(isinstance(mc, str) for _, mc in snames):
-                    arr = ", ".join(
-                        f"if({mc}, {_sql_str(nm)}, cast(null as string))"
-                        for nm, mc in snames
-                    )
-                    mq = f"filter(array({arr}), x -> x IS NOT NULL)"
-                else:
-                    mqa = F.array(*[
-                        F.when(
-                            F.expr(mc) if isinstance(mc, str) else mc,
-                            F.lit(nm),
-                        )
-                        for nm, mc in snames
-                    ])
-                    mq = F.filter(mqa, lambda x: x.isNotNull())
-            else:
-                mq = "cast(array() as array<string>)"
+                arr = ", ".join(
+                    f"if({mc}, {_sql_str(nm)}, cast(null as string))"
+                    for nm, mc in sorted(names, key=lambda x: x[0])
+                )
+                mq = f"filter(array({arr}), x -> x IS NOT NULL)"
             per_query.append((qid, m, s, mq))
 
-        def case_of(pieces: list[tuple[int, object]], default: str):
-            """query_id-dispatched CASE — one SQL parse when every
-            branch is text, the Column chain otherwise."""
-            if all(isinstance(x, str) for _, x in pieces):
-                whens = " ".join(
-                    f"WHEN (query_id = {qid}L) THEN ({x})"
-                    for qid, x in pieces
-                )
-                return F.expr(f"CASE {whens} ELSE {default} END")
-            out = None
-            for qid, x in pieces:
-                q = F.col("query_id") == qid
-                xc = F.expr(x) if isinstance(x, str) else x
-                out = F.when(q, xc) if out is None else out.when(q, xc)
-            return out.otherwise(F.expr(default))
+        def case_of(pieces: list[tuple[int, str]], default: str) -> Column:
+            """query_id-dispatched CASE, parsed once."""
+            whens = " ".join(
+                f"WHEN (query_id = {qid}L) THEN ({x})" for qid, x in pieces
+            )
+            return F.expr(f"CASE {whens} ELSE {default} END")
 
         m_case = case_of([(q, m) for q, m, _, _ in per_query], "false")
         s_case = case_of([(q, s) for q, _, s, _ in per_query], "0.0D")
@@ -4664,10 +4347,7 @@ class QueryEngine:
         equivalents). Scale shape: the one-scan match set + ONE
         count agg; queries with zero hits still return a row
         (count 0), like ES. Returns (query_id, total)."""
-        if any(_is_rich_bool(c) for _, c in queries):
-            hits = self._bool_tree_match_set(queries, field=field, docs=docs)
-        else:
-            hits = self._bool_match_set(queries, field=field, docs=docs)
+        hits = self._bool_tree_match_set(queries, field=field, docs=docs)
         qids = local_rows_df(self.spark, 
             [(int(q),) for q, _ in queries], schema="query_id long"
         )
@@ -4693,10 +4373,7 @@ class QueryEngine:
         — join it, aggregate it, or write it to parquet directly.
         Accepts the same specs as :meth:`bool_topk` (flat roles or
         rich nested trees)."""
-        if any(_is_rich_bool(c) for _, c in queries):
-            hits = self._bool_tree_match_set(queries, field=field)
-        else:
-            hits = self._bool_match_set(queries, field=field)
+        hits = self._bool_tree_match_set(queries, field=field)
         if hits is None:
             return local_rows_df(self.spark, 
                 [], schema="query_id long, doc_id long, score double"
@@ -4760,10 +4437,7 @@ class QueryEngine:
         from pyspark.sql import Window as W
 
         first = self.bool_topk(queries, k=window_size, field=field)
-        if any(_is_rich_bool(c) for _, c in rescore):
-            rs = self._bool_tree_match_set(rescore, field=field)
-        else:
-            rs = self._bool_match_set(rescore, field=field)
+        rs = self._bool_tree_match_set(rescore, field=field)
         # localize the (≤ window_size·|queries|) first-pass page ONCE:
         # it feeds both the semi-join broadcast and the left side below,
         # and as a lazy plan the whole first-pass ranking would execute
@@ -4863,7 +4537,7 @@ class QueryEngine:
                         "doc-value filters (term/terms/range/exists) gate "
                         "score functions"
                     )
-                pred = self._structured_pred(filt)
+                pred = F.expr(self._structured_pred_sql(filt))
                 cols.append(self._clause_col(filt))
             if not fn:
                 compiled.append((pred, F.lit(1.0), weight))
@@ -5008,10 +4682,7 @@ class QueryEngine:
         if not functions:
             raise ValueError("function_score needs at least one function")
         compiled, cols = self._function_cols(functions)
-        if any(_is_rich_bool(c) for _, c in queries):
-            hits = self._bool_tree_match_set(queries, field=field, docs=docs)
-        else:
-            hits = self._bool_match_set(queries, field=field, docs=docs)
+        hits = self._bool_tree_match_set(queries, field=field, docs=docs)
         if hits is None:
             return local_rows_df(self.spark, [], schema=TOPK_SCHEMA)
         if cols:
@@ -5299,10 +4970,7 @@ class QueryEngine:
         response."""
         from pyspark.sql import Window as W
 
-        if any(_is_rich_bool(c) for _, c in queries):
-            hits = self._bool_tree_match_set(queries, field=field, docs=docs)
-        else:
-            hits = self._bool_match_set(queries, field=field, docs=docs)
+        hits = self._bool_tree_match_set(queries, field=field, docs=docs)
         if hits is None:
             hits = local_rows_df(self.spark, 
                 [], schema="query_id long, doc_id long, score double"
@@ -5372,10 +5040,7 @@ class QueryEngine:
         rank, doc_id, <collapse>, score)."""
         from pyspark.sql import Window as W
 
-        if any(_is_rich_bool(c) for _, c in queries):
-            hits = self._bool_tree_match_set(queries, field=field, docs=docs)
-        else:
-            hits = self._bool_match_set(queries, field=field, docs=docs)
+        hits = self._bool_tree_match_set(queries, field=field, docs=docs)
         if hits is None:
             hits = local_rows_df(self.spark, 
                 [], schema="query_id long, doc_id long, score double"
@@ -5417,10 +5082,7 @@ class QueryEngine:
         the bool match set plus :meth:`_sort_tail`'s one doc-values
         join + one WindowGroupLimit."""
         specs = self._sort_specs(by, ascending)
-        if any(_is_rich_bool(c) for _, c in queries):
-            hits = self._bool_tree_match_set(queries, field=field, docs=docs)
-        else:
-            hits = self._bool_match_set(queries, field=field, docs=docs)
+        hits = self._bool_tree_match_set(queries, field=field, docs=docs)
         if hits is None:
             hits = local_rows_df(self.spark, 
                 [], schema="query_id long, doc_id long, score double"
@@ -5674,7 +5336,7 @@ class QueryEngine:
         if kind == "filters":
             elems, cols = [], set()
             for name, cl in b["filters"].items():
-                pred = self._structured_pred(cl)
+                pred = F.expr(self._structured_pred_sql(cl))
                 cols.add(self._clause_col(cl))
                 elems.append(F.when(pred, F.lit(str(name))))
             arr = F.filter(F.array(*elems), lambda x: x.isNotNull())
@@ -5717,7 +5379,7 @@ class QueryEngine:
                     raise ValueError(
                         "adjacency_matrix filter names cannot contain '&'"
                     )
-                pred = self._structured_pred(cl)
+                pred = F.expr(self._structured_pred_sql(cl))
                 cols.add(self._clause_col(cl))
                 elems.append(F.when(pred, F.lit(str(name))))
             m = F.filter(F.array(*elems), lambda x: x.isNotNull())
@@ -6045,10 +5707,7 @@ class QueryEngine:
             cols += cc
         if len(set(names)) != len(names):
             raise ValueError(f"composite source names collide: {names}")
-        if any(_is_rich_bool(c) for _, c in queries):
-            hits = self._bool_tree_match_set(queries, field=field, docs=docs)
-        else:
-            hits = self._bool_match_set(queries, field=field, docs=docs)
+        hits = self._bool_tree_match_set(queries, field=field, docs=docs)
         if hits is None:
             hits = local_rows_df(self.spark, 
                 [], schema="query_id long, doc_id long, score double"
@@ -6115,10 +5774,7 @@ class QueryEngine:
         Returns (query_id, term, fg, bg, score)."""
         from pyspark.sql import Window as W
 
-        if any(_is_rich_bool(c) for _, c in queries):
-            hits = self._bool_tree_match_set(queries, field=field)
-        else:
-            hits = self._bool_match_set(queries, field=field)
+        hits = self._bool_tree_match_set(queries, field=field)
         if hits is None:
             return local_rows_df(self.spark, 
                 [], schema="query_id long, term string, fg long, "

@@ -21,8 +21,8 @@ Python UDFs in Vectorized Query Execution"; no code taken from either):
    the doc range and ``after`` are masks, and the top k are kept by
    (score desc, doc_id asc).
 
-No block is skipped on a score bound. The segments still carry
-Ding & Suel per-block (max_tf, min_dl) bounds, but block-max rounds
+No block is skipped on a score bound, and the postings no longer
+store Ding & Suel per-block (max_tf, min_dl) bounds: block-max rounds
 (bound-ordered doc windows, θ seeded by the first round) cost more
 than this single pass on every measured query mix: they skipped 0 of
 34 blocks on the one benchmark (2.5k-page) call large enough to try

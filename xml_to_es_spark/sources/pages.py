@@ -16,6 +16,9 @@ page per row so the streaming splitter disappears.
 
 from __future__ import annotations
 
+import logging
+
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -31,13 +34,18 @@ PAGES_SCHEMA = T.StructType(
 )
 
 
+logger = logging.getLogger(__name__)
+
+
 def iceberg_available(spark: SparkSession) -> bool:
+    """True when the Iceberg Spark runtime is on the JVM classpath."""
     try:
         spark._jvm.java.lang.Class.forName(
             "org.apache.iceberg.spark.source.IcebergSource"
         )
         return True
-    except Exception:
+    except Py4JJavaError:
+        logger.debug("Iceberg runtime not on the classpath", exc_info=True)
         return False
 
 
