@@ -695,8 +695,8 @@ class EsRequest:
                     # scores are unused under sort-by-field: strip the
                     # score-only keys (score_mode/boost/_name) so the
                     # path+query filter form is what reaches
-                    # _structured_pred_sql (round-6 ADVICE: the full spec
-                    # used to raise a misleading 'path + query' error)
+                    # _structured_pred_sql (the full spec would raise a
+                    # misleading 'path + query' error)
                     spec = {
                         k2: v for k2, v in spec.items()
                         if k2 not in ("score_mode", "boost", "_name")
