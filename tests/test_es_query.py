@@ -1090,3 +1090,28 @@ def test_dsl_bool_filter_multi_token_match_is_or(spark, tmp_path_factory):
     np.testing.assert_allclose(
         flat.sort_values("doc_id").score, nested.sort_values("doc_id").score
     )
+
+
+def test_dsl_bool_should_beside_filter_is_optional(spark, tmp_path_factory):
+    """``should`` beside a ``filter`` and no ``must`` is optional, as in
+    ES (default minimum_should_match 0): a doc matching only the
+    filter comes back at score 0. The flat translation kept one should
+    clause required beside structured filters, so this body returned
+    docs 0 and 2 only."""
+    pdf = pd.DataFrame({
+        "doc_id": range(4),
+        "text": ["alpha hash", "beta join", "alpha other", "beta hash"],
+        "lang": ["en", "en", "en", "de"],
+    })
+    idx = str(tmp_path_factory.mktemp("dsl_should_filter") / "idx")
+    IndexBuilder(spark, IndexConfig(n_groups=1, stored_fields=("lang",))).build(
+        spark.createDataFrame(pdf), idx
+    )
+    e = QueryEngine(spark, idx)
+    got = es_search(e, {"query": {"bool": {
+        "should": [{"match": {"text": "alpha"}}],
+        "filter": [{"term": {"lang": "en"}}]}},
+        "size": 10}).toPandas()
+    assert list(got.doc_id) == [0, 2, 1]
+    assert got.score.iloc[0] > 0 and got.score.iloc[1] > 0
+    assert got.score.iloc[2] == 0.0

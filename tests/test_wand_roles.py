@@ -296,3 +296,30 @@ def test_empty_page_runs_no_spark_job(spark, plain):
         assert sc.statusTracker().getJobIdsForGroup("empty-page") == []
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_page_reads_run_no_spark_job(spark, plain, wand_sides):
+    """A non-empty coordinator answer (an ES ``match`` body and a
+    ``bool`` batch) is read with collect, toPandas and count without
+    starting a Spark job; the Spark side returns the same rows."""
+    eng, _ref = plain
+    sc = spark.sparkContext
+    got = {}
+    for side in wand_sides():
+        pages = [
+            es_search(eng, {"query": {"match": {"text": "alpha gamma"}}, "size": 5}),
+            eng.bool_topk(BOOL_QS[:2], k=4),
+        ]
+        if side == "spark":
+            got[side] = [_rows(p) for p in pages]
+            continue
+        try:
+            sc.setJobGroup("page-reads", "coordinator page reads")
+            got[side] = [_rows(p) for p in pages]
+            for p, rows in zip(pages, got[side]):
+                pdf = p.toPandas()
+                assert rows and p.count() == len(pdf) == len(rows)
+            assert sc.statusTracker().getJobIdsForGroup("page-reads") == []
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got["coordinator"] == got["spark"]

@@ -1300,9 +1300,12 @@ class EsRequest:
         nested-tree path: bool-level minimum_should_match / boost,
         nested bool sub-clauses, per-clause boost/operator options,
         mixed clause fields, structured clauses outside the filter
-        role, or a multi-token match clause under must or filter (the
+        role, a multi-token match clause under must or filter (the
         legacy flat translation would silently AND its tokens, where
-        ES ORs them). Flat single-token bodies keep the legacy
+        ES ORs them), or should clauses beside a filter and no must
+        (ES's default minimum_should_match is then 0, where the flat
+        translation keeps one should clause required unless a filter
+        is text). Flat single-token bodies keep the legacy
         translation, bit-identical to the direct engine call."""
         if ("minimum_should_match" in spec or "boost" in spec
                 or "_name" in spec):
@@ -1338,6 +1341,8 @@ class EsRequest:
                 if (role in ("must", "filter")
                         and len(self.eng._tokenize(opts["query"])) > 1):
                     return True
+        if spec.get("should") and spec.get("filter") and not spec.get("must"):
+            return True
         return len(fields) > 1
 
     def _bool_spec(self, spec: dict) -> tuple[dict, str | None]:

@@ -5,8 +5,15 @@ from __future__ import annotations
 import functools
 import logging
 import os
+import threading
 
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyspark.sql.types as T
 from pyspark.sql import SparkSession
+from pyspark.sql.classic.dataframe import DataFrame
+from pyspark.sql.types import _create_row
 
 logger = logging.getLogger(__name__)
 
@@ -75,35 +82,105 @@ def _parsed_schema(ddl: str):
     return _parse_datatype_string(ddl)
 
 
-def local_rows_df(spark: SparkSession, rows, schema):
-    """``spark.createDataFrame(rows, schema)`` for SMALL driver-side
-    row lists, materialized as a JVM ``LocalRelation`` via Arrow.
+def _cast_integral(bits: int):
+    """A long (``bits`` 63) / int (31) cell as the JVM round trip
+    returns it: a Python ``int`` in range. An integral float keeps its
+    value, NaN reads as null (Arrow's pandas semantics); anything else
+    raises where the JVM path would refuse or truncate it."""
+    lo, hi = -(1 << bits), (1 << bits) - 1
 
-    The stock list path parallelizes into ``defaultParallelism``
-    (= cores) pickled partitions, so EVERY materialization of the tiny
-    DataFrame (a broadcast build, a collect, a write) costs one
-    Python-worker round trip per core — and a downstream
-    ``coalesce(1)`` chains those round trips serially (~3.5 s on
-    local[32] for a 6-row manifest write, measured). The pandas/Arrow
-    path hands the rows to the JVM once, at creation: evaluation then
-    never touches a Python worker (guide §4: control how often the
-    JVM↔Python boundary is crossed, not just how much crosses it).
-    A DDL ``schema`` string is parsed once per string. Falls back to a
-    one-slice RDD for values Arrow cannot convert (pyarrow's errors,
-    or the ``TypeError``/``ValueError`` pyspark wraps them in), logged
-    at DEBUG."""
-    import pandas as pd
-    import pyarrow as pa
-    from pyspark.sql.types import StructType
+    def cast(v):
+        if type(v) is not int:
+            if isinstance(v, (float, np.floating)):
+                if v != v:
+                    return None
+                if not float(v).is_integer():
+                    raise TypeError(f"{v!r} is not integral")
+            elif isinstance(v, (bool, np.bool_)) or not isinstance(
+                v, (int, np.integer)
+            ):
+                raise TypeError(f"{type(v).__name__} {v!r} is not an integer")
+            v = int(v)
+        if not lo <= v <= hi:
+            raise ValueError(f"{v} is outside the {bits + 1}-bit range")
+        return v
 
-    rows = rows if isinstance(rows, list) else list(rows)
-    st = schema if isinstance(schema, StructType) else _parsed_schema(schema)
+    return cast
+
+
+def _cast_double(v):
+    """A double cell as the JVM round trip returns it: a Python
+    ``float``, bit-equal; NaN reads as null; an int must convert
+    exactly (Arrow's safe cast)."""
+    if isinstance(v, (bool, np.bool_)) or not isinstance(
+        v, (int, float, np.integer, np.floating)
+    ):
+        raise TypeError(f"{type(v).__name__} {v!r} is not a number")
+    f = float(v)
+    if isinstance(v, (int, np.integer)) and f != int(v):
+        raise ValueError(f"{v} has no exact double")
+    return None if f != f else f
+
+
+def _cast_string(v):
+    if not isinstance(v, str):
+        raise TypeError(f"{type(v).__name__} {v!r} is not a string")
+    return str(v)
+
+
+def _cast_boolean(v):
+    if not isinstance(v, (bool, np.bool_)):
+        raise TypeError(f"{type(v).__name__} {v!r} is not a boolean")
+    return bool(v)
+
+
+# the atomic field types a driver-resident frame holds:
+# type → (cell cast, Arrow type of the JVM's toPandas batches)
+_ATOMIC = {
+    T.LongType: (_cast_integral(63), pa.int64()),
+    T.IntegerType: (_cast_integral(31), pa.int32()),
+    T.DoubleType: (_cast_double, pa.float64()),
+    T.StringType: (_cast_string, pa.string()),
+    T.BooleanType: (_cast_boolean, pa.bool_()),
+}
+
+
+def _driver_rows(rows, st: T.StructType) -> list[T.Row] | None:
+    """``rows`` as the Rows a JVM collect of ``st`` returns, or None
+    when ``st`` has no field or a field that is not atomic. A value the
+    JVM path would refuse raises here (``TypeError``/``ValueError``)."""
+    kinds = [_ATOMIC.get(type(f.dataType)) for f in st.fields]
+    if not kinds or None in kinds:
+        return None
+    names = st.names
+    casts = [
+        (f.name, f.nullable, cast) for f, (cast, _a) in zip(st.fields, kinds)
+    ]
+    out = []
+    for r in rows:
+        r = tuple(r)
+        if len(r) != len(casts):
+            raise ValueError(f"row {r!r} does not have {len(casts)} fields")
+        vals = []
+        for v, (name, nullable, cast) in zip(r, casts):
+            try:
+                v = None if v is None else cast(v)
+            except (TypeError, ValueError) as e:
+                raise type(e)(f"field {name}: {e}") from None
+            if v is None and not nullable:
+                raise ValueError(f"field {name} is not nullable, got None")
+            vals.append(v)
+        out.append(_create_row(names, vals))
+    return out
+
+
+def _jvm_rows_df(spark: SparkSession, rows, st: T.StructType) -> DataFrame:
+    """``rows`` handed to the JVM once as a ``LocalRelation`` via Arrow,
+    or, for values Arrow cannot convert, as a one-slice RDD."""
     if not rows:
         # pyspark turns an empty pandas frame into an RDD scan, and
         # collecting that runs a Spark job; an empty JVM LocalRelation
         # collects on the driver
-        from pyspark.sql import DataFrame
-
         jss = spark._jsparkSession
         return DataFrame(
             jss.createDataFrame(
@@ -124,6 +201,111 @@ def local_rows_df(spark: SparkSession, rows, schema):
         return spark.createDataFrame(
             spark.sparkContext.parallelize(rows, 1), schema=st
         )
+
+
+class DriverRowsDataFrame(DataFrame):
+    """A DataFrame of rows that live on the driver. ``collect``,
+    ``toPandas``, ``count``, ``isEmpty`` and ``take``/``first``/``head``
+    answer from the rows and ``schema``/``columns`` from the parsed
+    schema, with no JVM call; the JVM relation is built (once, by
+    :func:`_jvm_rows_df`) when ``_jdf`` is first read: a join, filter,
+    union, write, explain or any other plan operation."""
+
+    def __new__(cls, spark: SparkSession, rows: list, st: T.StructType):
+        return object.__new__(cls)
+
+    def __init__(self, spark: SparkSession, rows: list, st: T.StructType):
+        self._rows = rows
+        self.__dict__["schema"] = st  # DataFrame.schema is a cached_property
+        self._jdf_lock = threading.Lock()
+        super().__init__(None, spark)
+
+    @property
+    def _jdf(self):
+        with self._jdf_lock:
+            if self._built_jdf is None:
+                logger.debug(
+                    "local_rows_df: building the JVM relation of %d "
+                    "driver rows (%s)", len(self._rows), self.schema.simpleString(),
+                )
+                self._built_jdf = _jvm_rows_df(
+                    self._session, self._rows, self.schema
+                )._jdf
+            return self._built_jdf
+
+    @_jdf.setter
+    def _jdf(self, jdf):
+        self._built_jdf = jdf
+
+    def collect(self) -> list[T.Row]:
+        return list(self._rows)
+
+    def count(self) -> int:
+        return len(self._rows)
+
+    def isEmpty(self) -> bool:
+        return not self._rows
+
+    def take(self, num: int) -> list[T.Row]:
+        if num < 0:  # the JVM's limit raises
+            return super().take(num)
+        return self._rows[:num]
+
+    def toPandas(self) -> pd.DataFrame:
+        """The JVM's Arrow ``toPandas`` on the same rows: one Arrow table
+        to pandas, then pyspark's per-field dtype correction."""
+        from pyspark.sql.pandas.types import _create_converter_to_pandas
+
+        st = self.schema
+        if self._rows:
+            cols = zip(*self._rows)
+            table = pa.Table.from_arrays(
+                [pa.array(c, type=_ATOMIC[type(f.dataType)][1])
+                 for c, f in zip(cols, st.fields)],
+                names=[f"col_{i}" for i in range(len(st.fields))],
+            )
+            pdf = table.to_pandas(
+                date_as_object=True, coerce_temporal_nanoseconds=True
+            )
+            pdf.columns = st.names
+        else:
+            pdf = pd.DataFrame(columns=st.names)
+        return pd.concat(
+            [_create_converter_to_pandas(f.dataType, f.nullable)(pser)
+             for (_n, pser), f in zip(pdf.items(), st.fields)],
+            axis="columns",
+        )
+
+
+def local_rows_df(spark: SparkSession, rows, schema) -> DataFrame:
+    """``spark.createDataFrame(rows, schema)`` for SMALL driver-side
+    row lists: every coordinator answer is handed over here.
+
+    A schema of atomic fields (long, int, double, string, boolean)
+    gives a :class:`DriverRowsDataFrame`: the rows, cast as a JVM
+    collect returns them (a value the JVM would refuse raises here),
+    stay on the driver, so ``collect``/``toPandas``/``count``/``take``
+    cost no py4j call and no Spark job; the JVM relation is built only
+    when an operation needs it. Other schemas are handed to the JVM at
+    once. Either way the JVM relation is a ``LocalRelation`` made via
+    Arrow: the stock list path parallelizes into ``defaultParallelism``
+    (= cores) pickled partitions, so EVERY materialization of the tiny
+    DataFrame (a broadcast build, a collect, a write) costs one
+    Python-worker round trip per core — and a downstream
+    ``coalesce(1)`` chains those round trips serially (~3.5 s on
+    local[32] for a 6-row manifest write, measured). Arrow hands the
+    rows to the JVM once: evaluation then never touches a Python
+    worker (guide §4: control how often the JVM↔Python boundary is
+    crossed, not just how much crosses it). A DDL ``schema`` string is
+    parsed once per string. Values Arrow cannot convert (pyarrow's
+    errors, or the ``TypeError``/``ValueError`` pyspark wraps them
+    in) fall back to a one-slice RDD, logged at DEBUG."""
+    rows = rows if isinstance(rows, list) else list(rows)
+    st = schema if isinstance(schema, T.StructType) else _parsed_schema(schema)
+    driver = _driver_rows(rows, st)
+    if driver is None:
+        return _jvm_rows_df(spark, rows, st)
+    return DriverRowsDataFrame(spark, driver, st)
 
 
 def _warm_start(spark: SparkSession) -> None:
